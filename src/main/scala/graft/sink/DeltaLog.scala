@@ -1,7 +1,8 @@
 package graft.sink
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, count_distinct, lit, max, when}
 
 /** Thrown when a writer holding a stale [[WriterEpoch]] touches a store
   * a newer writer has since claimed — the zombie-writer guard. The
@@ -23,7 +24,8 @@ final case class WriterEpoch(domain: String, epoch: Int, token: String)
   * [[GeoIndex]], [[StatsStore]]): a log of numbered delta directories
   * under a root, each written under a dot-prefixed temp name, renamed
   * into place, then SEALED by a zero-byte [[CommitMarker]] sentinel
-  * written as the final operation.
+  * written as the final operation. A commit is visible if and only if
+  * its marker exists.
   *
   * The marker — not the rename — is what readers gate on. Directory
   * rename is atomic on local FS/HDFS, but on object stores (S3A, the
@@ -48,9 +50,10 @@ final case class WriterEpoch(domain: String, epoch: Int, token: String)
   * retry, orphaned job) dies with [[FencedWriterException]] at its next
   * touch instead of interleaving commits or GC'ing a generation a live
   * writer's readers lease. All of a store's mutation paths must share
-  * ONE fence domain (the store's root dir — pass `fenceDomain = dir`
-  * everywhere, including [[migrateLegacy]]); split domains fence only
-  * the op types the live writer has already exercised.
+  * ONE fence domain (the store's root dir); split domains fence only
+  * the op types the live writer has already exercised. The stores reach
+  * the protocol through one [[Log]] value each, which fences every
+  * mutation on the store dir.
   */
 private[sink] object DeltaLog {
 
@@ -69,36 +72,37 @@ private[sink] object DeltaLog {
     * awaited — even when one fails — so the caller's cleanup can never
     * race a still-running leg's writes; the first failure is rethrown
     * after the barrier.
+    *
+    * Each leg runs on its own pool thread (inheriting the caller's Spark
+    * local properties) under its own job tag ([[LegTagPrefix]]). An
+    * interrupted caller cancels the tagged jobs — a thread blocked in an
+    * action returns on interrupt while its tasks keep writing — and
+    * rethrows only once no leg thread or tagged task is left
+    * ([[stopLegs]]).
     */
-  private[sink] def inParallel(legs: (() => Unit)*): Unit = {
-    if (legs.sizeIs <= 1) { legs.foreach(_.apply()); return }
+  private[sink] def inParallel(spark: SparkSession)(legs: (() => Unit)*): Unit = {
+    if (legs.isEmpty) return
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val call = java.util.UUID.randomUUID()
+    val tags = legs.indices.map(i => s"$LegTagPrefix$call-$i")
     val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
     try {
-      import scala.jdk.CollectionConverters._
-      val tasks = legs.map { l =>
+      val tasks = legs.zip(tags).map { case (l, tag) =>
         new java.util.concurrent.Callable[Option[Throwable]] {
-          def call(): Option[Throwable] =
+          def call(): Option[Throwable] = {
+            sc.addJobTag(tag)
             try { l(); None } catch { case e: Throwable => Some(e) }
+            finally sc.removeJobTag(tag)
+          }
         }
       }
-      // invokeAll blocks until EVERY leg finished (success or failure).
-      // r18 (advisor): that guarantee does NOT survive interruption —
-      // an interrupted invokeAll cancels unfinished tasks and throws
-      // immediately, and get() can throw CancellationException past the
-      // Option collection. The catch below restores the barrier: wait
-      // out every already-RUNNING leg (shutdownNow + awaitTermination;
-      // queued-but-unstarted tasks are cancelled, which is safe — they
-      // never touched the filesystem) before propagating, so commit
-      // cleanup can never race a still-writing leg.
       val outcomes =
         try pool.invokeAll(tasks.asJava).asScala.map(_.get())
         catch {
           case e @ (_: InterruptedException |
               _: java.util.concurrent.CancellationException) =>
-            pool.shutdownNow()
-            // bounded patience: a wedged leg shouldn't hang shutdown
-            // forever, but a healthy parquet write gets to finish
-            pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+            stopLegs(sc, pool, tags)
             Thread.currentThread().interrupt()
             throw e
         }
@@ -106,28 +110,33 @@ private[sink] object DeltaLog {
     } finally pool.shutdown()
   }
 
-  /** Root-level sentinel: every numbered dir under this root that needs
-    * adopting has been adopted (see [[legacyAdoptable]]), and every LATER
-    * marker-less dir is a torn/crashed commit, never a legacy one.
-    * Written by readers after a completed adoption sweep, and by
-    * [[commit]] BEFORE its rename — so while any marker-gated commit is
-    * in flight the sentinel already exists and no reader will mistake
-    * its mid-copy directory for a legacy commit and seal it early.
-    */
-  val AdoptedMarker = "_PROTOCOL_MARKERS"
+  /** Job-tag prefix of [[inParallel]]'s legs: one tag per leg per call. */
+  private[sink] val LegTagPrefix = "graft-leg-"
 
-  /** Intent sentinel for the write path's legacy-adoption sweep: written
-    * BEFORE the first legacy dir is sealed, removed after [[AdoptedMarker]]
-    * lands. Its presence with [[AdoptedMarker]] absent proves a sweep
-    * crashed mid-way — and, because the sweep only ever starts on a
-    * zero-sealed-commits root and this writer renames nothing before
-    * [[AdoptedMarker]] exists, every marker-less numeric dir in that state
-    * is still a pre-marker legacy commit: the sweep is safely RESUMED
-    * (by the next write, and in memory by reads) instead of the root
-    * being misread as an ambiguous mixed upgrade and the unsealed
-    * remainder silently orphaned.
+  /** Upper bound on the interrupt barrier's wait for cancelled legs. */
+  private val LegStopPatience = java.time.Duration.ofMinutes(10)
+
+  /** The interrupt barrier of [[inParallel]]: keep cancelling the legs'
+    * tagged jobs (a leg between two actions may start a fresh one) until
+    * every leg thread has exited and no tagged job runs or has an active
+    * task. Leg threads are not interrupted: the cancel fails their
+    * pending action, while an interrupt could tear a Hadoop write.
     */
-  val AdoptingMarker = "_ADOPTING"
+  private def stopLegs(sc: org.apache.spark.SparkContext,
+      pool: java.util.concurrent.ExecutorService, tags: Seq[String]): Unit = {
+    val deadline = System.nanoTime() + LegStopPatience.toNanos
+    val st = sc.statusTracker
+    def running = tags.exists(st.getJobIdsForTag(_).exists(job =>
+      st.getJobInfo(job).exists { j =>
+        j.status == org.apache.spark.JobExecutionStatus.RUNNING ||
+          j.stageIds.exists(st.getStageInfo(_).exists(_.numActiveTasks > 0))
+      }))
+    pool.shutdown()
+    while ((!pool.isTerminated || running) && System.nanoTime() < deadline) {
+      tags.foreach(sc.cancelJobsWithTag)
+      try Thread.sleep(50) catch { case _: InterruptedException => () }
+    }
+  }
 
   def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -229,7 +238,7 @@ private[sink] object DeltaLog {
   private val EpochKeep = 8
 
   /** Fail loudly if a claim newer than `we` exists — called at every
-    * mutation point of [[commit]] / [[installBase]] / [[migrateLegacy]].
+    * mutation point of [[commit]] / [[installBase]] / [[Log.fold]].
     */
   def checkFence(spark: SparkSession, we: WriterEpoch): Unit = {
     val (claims, damaged) = listEpochs(fs(spark, we.domain), we.domain)
@@ -275,18 +284,6 @@ private[sink] object DeltaLog {
   private[sink] def clearSessionEpoch(domain: String): Unit =
     sessionEpochs.remove(domain): Unit
 
-  /** Seal a freshly-created commit root as already-adopted: every store
-    * calls this at CREATION, so a root born under the marker protocol
-    * never runs the legacy-adoption sweep — without it, a crash during
-    * the root's very first commit would leave a marker-less dir that a
-    * reader could not distinguish from a legacy commit.
-    */
-  def initRoot(spark: SparkSession, root: String): Unit = {
-    val f = fs(spark, root)
-    f.mkdirs(new Path(root))
-    f.create(new Path(s"$root/$AdoptedMarker"), true).close()
-  }
-
   /** Every numeric delta dir under `root`, sealed or not — the writer's
     * view, used only to pick fresh sequence numbers so a crashed
     * (marker-less) commit's number is never reused.
@@ -302,211 +299,17 @@ private[sink] object DeltaLog {
       .map(_.toInt).sorted
   }
 
-  /** Structural completeness of a candidate legacy commit dir: the
-    * store's always-present payload child exists, nothing `.tmp`-nested
-    * does, every `*.parquet` file below it carries the PAR1 magic at
-    * BOTH ends (a zero-byte or truncated file never adopts), and any
-    * Spark-written payload child (one with `part-*` files) carries its
-    * `_SUCCESS` commit marker. Defense in depth for the adoption paths
-    * below — a torn object-store copy of a LEGACY commit (some objects
-    * missing, each present object whole) cannot be detected from
-    * content alone, which is exactly why automatic adoption is
-    * restricted to the unambiguous case and everything else goes
-    * through [[migrateLegacy]].
-    */
-  private def legacyComplete(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path, markerChild: String): Boolean = {
-    val kids = f.listStatus(dir).toSeq
-    val names = kids.map(_.getPath.getName)
-    if (!names.contains(markerChild) || names.exists(_.startsWith(".tmp")))
-      return false
-    val stack = scala.collection.mutable.Stack(kids.filter(_.isDirectory): _*)
-    val magic = Array[Byte]('P', 'A', 'R', '1')
-    while (stack.nonEmpty) {
-      val d = stack.pop()
-      val inner = f.listStatus(d.getPath).toSeq
-      stack.pushAll(inner.filter(_.isDirectory))
-      val files = inner.filterNot(_.isDirectory)
-      if (files.exists(_.getPath.getName.startsWith("part-")) &&
-          !files.exists(_.getPath.getName == "_SUCCESS")) return false
-      for (st <- files if st.getPath.getName.endsWith(".parquet")) {
-        if (st.getLen < 12) return false
-        val in = f.open(st.getPath)
-        try {
-          val head = new Array[Byte](4)
-          val tail = new Array[Byte](4)
-          in.readFully(0, head)
-          in.readFully(st.getLen - 4, tail)
-          if (!java.util.Arrays.equals(head, magic) ||
-              !java.util.Arrays.equals(tail, magic)) return false
-        } finally in.close()
-      }
-    }
-    true
-  }
-
-  /** Marker-less numeric dirs that are UNAMBIGUOUSLY pre-marker legacy
-    * commits — computed without writing anything. The rule: adopt only
-    * when the root holds ZERO sealed commits. [[commit]] seals the root
-    * with [[AdoptedMarker]] before its very first rename, so a root
-    * where a marker-era commit ever ran carries the sentinel (and this
-    * sweep never fires); a root with sealed commits but no sentinel is
-    * a mid-upgrade mix whose marker-less dirs may be CRASHED marker-era
-    * commits — a crash between rename and seal leaves a complete-looking
-    * dir whose batch was then retried under a fresh seq, so adopting it
-    * double-counts (additive stores like StatsStore would inflate
-    * silently). That ambiguous case is never auto-adopted; it takes the
-    * operator-asserted [[migrateLegacy]]. (This is deliberately stricter
-    * than a below-highest-sealed-seq bound: a crashed commit RETRIED and
-    * sealed under a later seq sits below that bound and would still
-    * double-count.)
-    */
-  private def legacyAdoptable(spark: SparkSession, root: String,
-      markerChild: String): Seq[Int] = {
-    val f = fs(spark, root)
-    if (!f.exists(new Path(root)) ||
-        f.exists(new Path(s"$root/$AdoptedMarker"))) return Seq.empty
-    val nums = numericSeqs(spark, root)
-    val sealedSet = nums.filter(s =>
-      f.exists(new Path(s"$root/$s/$CommitMarker"))).toSet
-    // [[AdoptingMarker]] present = a sweep crashed mid-way; the seals it
-    // already wrote don't make the root ambiguous — resume over the rest
-    val resuming = f.exists(new Path(s"$root/$AdoptingMarker"))
-    if (sealedSet.nonEmpty && !resuming) Seq.empty
-    else nums.filterNot(sealedSet)
-      .filter(s => legacyCompleteCached(f, s"$root/$s", markerChild))
-  }
-
-  /** [[legacyComplete]] with a per-JVM positive cache: a dir that passed
-    * the deep scan is immutable-once-written (legacy commits are never
-    * rewritten), so repeated reads of an unmigrated legacy root — every
-    * listSeqs call on a read-only deployment re-runs the sweep — pay the
-    * O(files) parquet-magic round-trips once, not per read. Negative
-    * results are NOT cached (an in-flight copy may complete later), and
-    * the key carries a RECURSIVE fingerprint of the dir — every nested
-    * file's (path, len, mtime), gathered from listStatus alone, no file
-    * opens — so a nested file later truncated/replaced, or a RECYCLED
-    * path (a root torn down outside the protocol and rebuilt with the
-    * same seq numbers), re-scans rather than trusting the old verdict.
-    * The fingerprint walk is O(directories) metadata round-trips; the
-    * deep scan it caches additionally OPENS every parquet file twice,
-    * so the cache still pays for itself on every re-read.
-    */
-  // keyed by (dir, markerChild) holding the LAST verified fingerprint —
-  // a tree change supersedes the old entry instead of stranding it
-  // forever (the Set-of-composite-keys shape grew one dead entry per
-  // tree change, unbounded on slowly-mutating unadopted roots)
-  private val legacyCompleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def dirFingerprint(f: org.apache.hadoop.fs.FileSystem,
-      dir: Path): String = {
-    val sb = new StringBuilder
-    // PATHS RELATIVE TO THE ROOT, not bare names: name-only digests
-    // collide across structurally different trees (a file moved
-    // between nesting levels keeps its name/len/mtime triple), and a
-    // collision here would reuse a stale legacy-complete verdict
-    val rootLen = f.makeQualified(dir).toString.length
-    val stack = scala.collection.mutable.Stack(dir)
-    while (stack.nonEmpty) {
-      val d = stack.pop()
-      f.listStatus(d).sortBy(_.getPath.getName).foreach { st =>
-        sb.append(f.makeQualified(st.getPath).toString.drop(rootLen))
-          .append('#').append(st.getLen)
-          .append('#').append(st.getModificationTime).append(';')
-        if (st.isDirectory) stack.push(st.getPath)
-      }
-    }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    java.util.Base64.getEncoder.encodeToString(
-      md.digest(sb.toString.getBytes("UTF-8")))
-  }
-  private def legacyCompleteCached(f: org.apache.hadoop.fs.FileSystem,
-      dir: String, markerChild: String): Boolean = {
-    val fp =
-      try dirFingerprint(f, new Path(dir))
-      catch { case _: java.io.FileNotFoundException => return false }
-    val key = s"$dir#$markerChild"
-    legacyCompleteCache.get(key) == fp ||
-      (legacyComplete(f, new Path(dir), markerChild) && {
-        legacyCompleteCache.put(key, fp); true
-      })
-  }
-
-  /** Explicit migration for a store upgraded from the pre-marker
-    * protocol: seals every marker-less numeric dir with `seq <= upToSeq`
-    * that passes the completeness check, then seals the root with
-    * [[AdoptedMarker]]. The OPERATOR asserts the bound — `upToSeq` must
-    * be the store's last pre-marker commit (everything above it that
-    * lacks a marker is a crashed marker-era commit and stays invisible).
-    * Run offline with the single writer stopped, with write credentials.
-    * Returns the seqs sealed. The automatic read path only ever adopts
-    * the unambiguous zero-sealed-commits case (see [[legacyAdoptable]]);
-    * this is the path for everything else. Crash recovery: a crash
-    * mid-migration leaves some dirs sealed and no [[AdoptedMarker]] —
-    * simply RE-RUN migrateLegacy with the same bound (sealing is
-    * idempotent; already-sealed dirs are skipped). The automatic resume
-    * sentinel ([[AdoptingMarker]]) is deliberately NOT used here: it
-    * would resume without the operator's upToSeq bound.
-    * `fenceDomain` is the store's fence domain — the SAME one its
-    * writers pass to [[commit]]/[[installBase]] (the store dir for the
-    * production stores) — so the fresh epoch acquired here actually
-    * fences a zombie writer; it is required, not defaulted, because
-    * defaulting to the commit root would silently split the domain.
-    */
-  def migrateLegacy(spark: SparkSession, root: String, markerChild: String,
-      upToSeq: Int, fenceDomain: String): Seq[Int] = {
-    val f = fs(spark, root)
-    if (!f.exists(new Path(root))) return Seq.empty
-    // acquire a FRESH claim (not the session's): migration asserts the
-    // single writer is stopped — registering a new epoch makes that
-    // enforced, fencing any zombie still holding the old one. The
-    // fence domain is REQUIRED (no root default): it must be the SAME
-    // domain the store's writers check — the store dir, not the commit
-    // root — or the fresh epoch fences nobody (the split-domain hazard
-    // the class doc warns about).
-    val we = acquireEpoch(spark, fenceDomain)
-    sessionEpochs.put(we.domain, we) // this JVM now owns the store
-    val adoptable = numericSeqs(spark, root).filter(s =>
-      s <= upToSeq && !f.exists(new Path(s"$root/$s/$CommitMarker")) &&
-        legacyCompleteCached(f, s"$root/$s", markerChild))
-    adoptable.foreach(s =>
-      f.create(new Path(s"$root/$s/$CommitMarker"), true).close())
-    checkFence(spark, we)
-    f.create(new Path(s"$root/$AdoptedMarker"), true).close()
-    adoptable
-  }
-
   /** COMMITTED sequence numbers under `root`, ascending: numeric dirs
     * sealed by [[CommitMarker]]. Skips in-flight `.tmp-*` dirs, strays
     * (non-numeric names), and marker-less dirs — the latter are torn or
     * crashed commits a reader must never consume (their writer either
     * died before sealing, or an object-store copy is still in flight).
-    *
-    * Pass `adoptChild` (the store's always-present payload child) to
-    * also admit pre-marker LEGACY commits — READ-ONLY: the adopted view
-    * is computed in memory ([[legacyAdoptable]] — only the unambiguous
-    * zero-sealed-commits case), so readers with read-only credentials
-    * keep working and a reader can never seal another writer's mid-copy
-    * dir. Markers are persisted by the write path ([[commit]] sweeps
-    * before its first rename) or by the explicit [[migrateLegacy]].
-    * TOCTOU guard: if [[AdoptedMarker]] appears DURING the in-memory
-    * sweep (a marker-era writer's pre-rename PUT — its rename may have
-    * torn our listing), the adopted view is discarded and the strict
-    * marker-gated view is re-taken.
+    * Reads write nothing.
     */
-  def listSeqs(spark: SparkSession, root: String,
-      adoptChild: Option[String] = None): Seq[Int] = {
+  def listSeqs(spark: SparkSession, root: String): Seq[Int] = {
     val f = fs(spark, root)
-    def sealedView(): Seq[Int] = numericSeqs(spark, root)
+    numericSeqs(spark, root)
       .filter(s => f.exists(new Path(s"$root/$s/$CommitMarker")))
-    adoptChild match {
-      case Some(c) if f.exists(new Path(root)) &&
-          !f.exists(new Path(s"$root/$AdoptedMarker")) =>
-        val adopted = legacyAdoptable(spark, root, c)
-        if (f.exists(new Path(s"$root/$AdoptedMarker"))) sealedView()
-        else (adopted ++ sealedView()).distinct.sorted
-      case _ => sealedView()
-    }
   }
 
   /** Next fresh sequence: past ALL numeric dirs, sealed or not — reusing
@@ -525,10 +328,10 @@ private[sink] object DeltaLog {
   def commit(spark: SparkSession, root: String, seq: Int,
       markerChild: String, fenceDomain: String,
       epoch: WriterEpoch = null)(write: String => Unit): Int = {
-    // REQUIRED, like migrateLegacy's: a store's commit root is usually
-    // `$dir/commits`, a CHILD of the fence domain — defaulting to the
-    // root here silently split the domain (zombie commits unfenced by a
-    // rival's epoch on the store dir, the class-doc hazard)
+    // REQUIRED: a store's commit root is usually `$dir/commits`, a
+    // CHILD of the fence domain — defaulting to the root here silently
+    // split the domain (zombie commits unfenced by a rival's epoch on
+    // the store dir, the class-doc hazard)
     require(fenceDomain != null && fenceDomain.nonEmpty,
       "commit() needs the store's fence domain (the store root dir — " +
         "the SAME domain every other mutation of this store checks)")
@@ -540,29 +343,6 @@ private[sink] object DeltaLog {
     // re-check AFTER the (possibly long) write, BEFORE anything becomes
     // visible — a fenced commit leaves only an invisible `.tmp-*` stray
     checkFence(spark, we)
-    // legacy sweep + AdoptedMarker PUT strictly BEFORE the rename: once
-    // any marker-gated commit is in flight the root is sealed as
-    // adopted, so no reader's in-memory adoption can admit our mid-copy
-    // dir. The WRITER persists the markers (single-writer contract — no
-    // racing writer whose crash this could seal — and it evidently has
-    // write credentials); only the unambiguous zero-sealed-commits case
-    // auto-adopts, the mixed case takes [[migrateLegacy]].
-    if (!f.exists(new Path(s"$root/$AdoptedMarker"))) {
-      val adoptable = legacyAdoptable(spark, root, markerChild)
-      // intent BEFORE the first seal: a crash mid-sweep leaves the
-      // sentinel, so the next write (and every read) RESUMES the sweep
-      // instead of misreading the half-sealed root as an ambiguous
-      // mixed upgrade and orphaning the unsealed remainder
-      if (adoptable.nonEmpty)
-        f.create(new Path(s"$root/$AdoptingMarker"), true).close()
-      adoptable.foreach(s =>
-        f.create(new Path(s"$root/$s/$CommitMarker"), true).close())
-      f.create(new Path(s"$root/$AdoptedMarker"), true).close()
-      f.delete(new Path(s"$root/$AdoptingMarker"), false): Unit
-    } else
-      // a crash between AdoptedMarker and the intent delete leaves a
-      // harmless stray intent — clear it (no-op when absent)
-      f.delete(new Path(s"$root/$AdoptingMarker"), false): Unit
     val dest = new Path(s"$root/$seq")
     require(f.rename(new Path(tmp), dest),
       s"could not commit delta $seq (concurrent writer?)")
@@ -579,18 +359,16 @@ private[sink] object DeltaLog {
 
   // ---- versioned, marker-gated BASE directories ------------------------
   //
-  // The compacted base has the same object-store problem the commit log
-  // had: the old protocol installed a freshly-written `.X-next` via TWO
-  // DIRECTORY RENAMES, and on S3A a directory rename is a non-atomic
-  // copy+delete — a reader resolving the base mid-swap saw a missing or
-  // PARTIAL base. The versioned protocol never renames a directory:
-  // each generation is written IN PLACE as `$dir/$name-v<N>`, sealed by
-  // [[CommitMarker]] as the final single-object PUT, and readers resolve
-  // the highest SEALED generation. The newest `keepGenerations` previous
-  // sealed generations are kept so a reader that resolved its base
-  // before recent installs keeps a complete directory to scan; older
-  // ones are GC'd. A crashed install leaves an unsealed generation that
-  // readers never see and whose number is never reused.
+  // On S3A a directory rename is a non-atomic copy+delete, so a base
+  // swapped in by rename can be read missing or PARTIAL mid-swap. The
+  // versioned protocol never renames a directory: each generation is
+  // written IN PLACE as `$dir/$name-v<N>`, sealed by [[CommitMarker]] as
+  // the final single-object PUT, and readers resolve the highest SEALED
+  // generation. The newest `keepGenerations` previous sealed generations
+  // are kept so a reader that resolved its base before recent installs
+  // keeps a complete directory to scan; older ones are GC'd. A crashed
+  // install leaves an unsealed generation that readers never see and
+  // whose number is never reused.
 
   private def baseVersions(spark: SparkSession, dir: String,
       name: String): Seq[(Int, Boolean)] = {
@@ -609,14 +387,14 @@ private[sink] object DeltaLog {
   }
 
   /** The CURRENT base directory for `name` under `dir`: the highest
-    * sealed `$name-v<N>` generation, falling back to the legacy bare
-    * `$dir/$name` layout for stores written before the versioned
-    * protocol (generation 0).
+    * sealed `$name-v<N>` generation. A store without one was never
+    * built (or every install crashed before its seal).
     */
   def currentBase(spark: SparkSession, dir: String, name: String): String =
     baseVersions(spark, dir, name).filter(_._2).lastOption match {
       case Some((v, _)) => s"$dir/$name-v$v"
-      case None => s"$dir/$name"
+      case None => throw new java.io.FileNotFoundException(
+        s"no sealed '$name' base generation under $dir")
     }
 
   /** Install a new base generation: run `write` against the next
@@ -624,10 +402,8 @@ private[sink] object DeltaLog {
     * a crashed install never collides), seal it with [[CommitMarker]],
     * then GC all but the newest `keepGenerations` PREVIOUS sealed
     * generations (unsealed crashed strays go immediately — no reader
-    * ever resolves one; the legacy bare dir counts as the oldest
-    * readable generation and goes once `keepGenerations` sealed
-    * versioned generations precede this install). Returns the new base
-    * path; visibility is the marker PUT — no directory is ever renamed.
+    * ever resolves one). Returns the new base path; visibility is the
+    * marker PUT — no directory is ever renamed.
     *
     * READER-LEASE BOUND: a reader that resolved [[currentBase]] stays
     * complete across at most `keepGenerations` subsequent installs —
@@ -665,11 +441,115 @@ private[sink] object DeltaLog {
     val retained = sealedPrev.takeRight(keepGenerations).toSet
     versions.map(_._1).filter(o => !retained.contains(o))
       .foreach(o => f.delete(new Path(s"$dir/$name-v$o"), true))
-    if (sealedPrev.size >= keepGenerations)
-      f.delete(new Path(s"$dir/$name"), true)
-    // stray temp dirs from the retired rename protocol
-    f.delete(new Path(s"$dir/.$name-next"), true)
-    f.delete(new Path(s"$dir/.$name-old"), true)
     path
+  }
+
+  // ---- the store kit -----------------------------------------------------
+
+  /** One store's log: commits under `$dir/$sub`, base generations
+    * `$dir/$base-v<N>`, every mutation fenced on the store dir.
+    * `markerChild` is the payload child every commit writes;
+    * `foldDue(spark, dir, pending, maxDeltas)` is the fold policy.
+    */
+  final case class Log(sub: String, base: String, markerChild: String = "docs",
+      foldDue: (SparkSession, String, Seq[Int], Int) => Boolean =
+        (_, _, pending, maxDeltas) => pending.length > maxDeltas) {
+
+    def commitDir(dir: String, seq: Int): String = s"$dir/$sub/$seq"
+
+    /** Sealed commits, ascending. */
+    def seqs(spark: SparkSession, dir: String): Seq[Int] =
+      listSeqs(spark, s"$dir/$sub")
+
+    def currentBase(spark: SparkSession, dir: String): String =
+      DeltaLog.currentBase(spark, dir, base)
+
+    /** Owner table of the merge-on-read views: per id any commit in
+      * `seqs` wrote (its `docs` leg), the highest such seq `_live_seq`.
+      */
+    def owners(spark: SparkSession, dir: String, seqs: Seq[Int],
+        idCol: String): DataFrame =
+      seqs.map { s =>
+        spark.read.parquet(s"${commitDir(dir, s)}/docs")
+          .select(col(idCol), lit(s).as("_live_seq"))
+      }.reduce(_.unionByName(_))
+        .groupBy(col(idCol)).agg(max("_live_seq").as("_live_seq"))
+
+    /** Commit one batch under the next seq, each leg writing into the
+      * commit's temp dir, the legs run by [[inParallel]]. Returns the seq.
+      */
+    def commit(spark: SparkSession, dir: String)(legs: (String => Unit)*): Int =
+      DeltaLog.commit(spark, s"$dir/$sub", nextSeq(spark, s"$dir/$sub"),
+          markerChild, fenceDomain = dir) { tmp =>
+        inParallel(spark)(legs.map(leg => () => leg(tmp)): _*)
+      }
+
+    /** Reject an upsert batch the owner table cannot resolve, in ONE
+      * aggregate action: a null id (invisible to the equality-keyed owner
+      * join — never superseded or deleted) or a duplicated one (both
+      * versions would survive the one-owner-seq-per-id filter).
+      */
+    def requireOwnable(batch: DataFrame, idCol: String): Unit = {
+      val g = batch.agg(count(lit(1)).as("n"),
+        count_distinct(col(idCol)).as("nd"),
+        count(when(col(idCol).isNull, 1)).as("nn")).head()
+      require(g.getLong(2) == 0 && g.getLong(0) == g.getLong(1),
+        s"upsert: batch carries a null or duplicated '$idCol' " +
+          s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct non-null ids); " +
+          "a commit owns each non-null id once — dedupe last-writer-wins " +
+          "upstream")
+    }
+
+    /** Commit keyed tombstones: the `ids` own their rows with an empty
+      * `leg` of the base's schema (unionByName-complete). Returns the seq.
+      */
+    def commitTombstones(spark: SparkSession, dir: String, ids: DataFrame,
+        idCol: String, leg: String): Int = {
+      val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        spark.read.parquet(currentBase(spark, dir)).schema).repartition(1)
+      commit(spark, dir)(
+        tmp => empty.write.mode("overwrite").parquet(s"$tmp/$leg"),
+        tmp => ids.select(col(idCol)).distinct().coalesce(1)
+          .write.mode("overwrite").parquet(s"$tmp/docs"))
+    }
+
+    /** Install a new base (`write`) alongside the independent
+      * `sideLegs`, then drop the log: everything live is in the base.
+      */
+    def rebuild(spark: SparkSession, dir: String, sideLegs: (() => Unit)*)(
+        write: String => Unit): Unit = {
+      val install = () => installBase(spark, dir, base, fenceDomain = dir)(write): Unit
+      inParallel(spark)(install +: sideLegs: _*)
+      fs(spark, dir).delete(new Path(s"$dir/$sub"), true): Unit
+    }
+
+    /** Fold the pending commits into a new base generation (`folded`
+      * is built after the epoch resolves), then delete them behind a
+      * fence re-check: a zombie compactor never deletes commits a rival's
+      * view holds. Returns whether anything was pending.
+      */
+    def fold(spark: SparkSession, dir: String, keepGenerations: Int,
+        epoch: WriterEpoch)(folded: => String => Unit): Boolean = {
+      val pending = seqs(spark, dir)
+      if (pending.nonEmpty) {
+        val we = resolveEpoch(spark, dir, epoch)
+        installBase(spark, dir, base, keepGenerations, fenceDomain = dir,
+          epoch = we)(folded): Unit
+        checkFence(spark, we)
+        val f = fs(spark, dir)
+        pending.foreach(s => f.delete(new Path(commitDir(dir, s)), true))
+      }
+      pending.nonEmpty
+    }
+
+    /** Run `compact` iff [[foldDue]] holds for the pending commits;
+      * returns that.
+      */
+    def maybeCompact(spark: SparkSession, dir: String, maxDeltas: Int)(
+        compact: => Unit): Boolean = {
+      val due = foldDue(spark, dir, seqs(spark, dir), maxDeltas)
+      if (due) compact
+      due
+    }
   }
 }

@@ -65,6 +65,8 @@ object GeoIndex {
   private final case class Meta(idCol: String, latCol: String,
       lonCol: String, cellDeg: Double)
 
+  private[sink] val log = DeltaLog.Log("commits", "cells")
+
   // The schema contract is immutable between rebuilds (upsert/delete/
   // compact never touch it), so it memoizes per (session, dir),
   // refreshed by [[write]] — one meta read (a Spark job) per serving
@@ -187,20 +189,16 @@ object GeoIndex {
     // already bounded: a rebuild is a serving cutover under a fenced
     // single writer, and a crash mid-write leaves the store a rebuild
     // re-runs anyway (OPTIMIZATION_r18.md, advisor item 2).
-    DeltaLog.inParallel(
+    log.rebuild(spark, dir,
       () => spark.createDataFrame(
           spark.sparkContext.parallelize(
             Seq(Row(idCol, latCol, lonCol, cellDeg)), 1), metaSchema)
-        .write.mode("overwrite").parquet(s"$dir/meta"),
-      () => DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir) { tmp =>
-        checkedPoints(points, latCol, lonCol)
-          .withColumn("cell", cellExpr(latCol, lonCol, cellDeg))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-      }: Unit)
-    // a rebuild starts a fresh history: everything live is in the base
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+        .write.mode("overwrite").parquet(s"$dir/meta")) { tmp =>
+      checkedPoints(points, latCol, lonCol)
+        .withColumn("cell", cellExpr(latCol, lonCol, cellDeg))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    }
     metaCache.put((spark, dir),
       (metaMTime(spark, dir), Meta(idCol, latCol, lonCol, cellDeg)))
   }
@@ -223,14 +221,7 @@ object GeoIndex {
     require(m.idCol == idCol && m.latCol == latCol && m.lonCol == lonCol,
       s"index at $dir was built over ('${m.idCol}', '${m.latCol}', " +
         s"'${m.lonCol}'), not ('$idCol', '$latCol', '$lonCol')")
-    val g = points.agg(count(lit(1)).as("n"),
-      count_distinct(col(idCol)).as("nd"),
-      count(when(col(idCol).isNull, 1)).as("nn")).head()
-    require(g.getLong(2) == 0 && g.getLong(0) == g.getLong(1),
-      s"upsert: batch carries a null or duplicated '$idCol' " +
-        s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct non-null ids); " +
-        "a commit owns each non-null id once — dedupe last-writer-wins " +
-        "upstream")
+    log.requireOwnable(points, idCol)
     // one file per O(batch) commit leg, cell-sorted for row-group
     // pruning: the batch inherits the source scan's partitioning (32
     // near-empty files per tiny commit otherwise), and every later read
@@ -240,13 +231,10 @@ object GeoIndex {
       .withColumn("cell", cellExpr(latCol, lonCol, m.cellDeg))
       .select(col(idCol), col(latCol), col(lonCol), col("cell"))
       .coalesce(1).sortWithinPartitions("cell")
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent O(batch) legs → concurrent jobs (r17)
-        () => tagged.write.mode("overwrite").parquet(s"$tmp/cells"),
-        () => tagged.select(col(idCol))
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    log.commit(spark, dir)(
+      tmp => tagged.write.mode("overwrite").parquet(s"$tmp/cells"),
+      tmp => tagged.select(col(idCol))
+        .write.mode("overwrite").parquet(s"$tmp/docs"))
   }
 
   /** Delete by key: the ids claim ownership with no points — a keyed
@@ -257,21 +245,8 @@ object GeoIndex {
     val m = readMeta(spark, dir)
     require(m.idCol == idCol,
       s"index at $dir is keyed by '${m.idCol}', not '$idCol'")
-    val baseSchema = spark.read
-      .parquet(DeltaLog.currentBase(spark, dir, "cells")).schema
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], baseSchema).repartition(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => empty.write.mode("overwrite").parquet(s"$tmp/cells"),
-        () => ids.select(col(idCol)).distinct().coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    log.commitTombstones(spark, dir, ids, idCol, "cells")
   }
-
-  private def commitSeqs(spark: SparkSession, dir: String): Seq[Int] =
-    DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
 
   /** The LIVE point set, id-granular last-writer-wins over base +
     * commits, with an optional cell filter pushed into EVERY leg (sound
@@ -286,21 +261,16 @@ object GeoIndex {
     val m = readMeta(spark, dir)
     def pruned(df: DataFrame): DataFrame =
       cellFilter.fold(df)(cs => df.filter(col("cell").isin(cs: _*)))
-    val base = pruned(
-      spark.read.parquet(DeltaLog.currentBase(spark, dir, "cells")))
-    val seqs = preSeqs.getOrElse(commitSeqs(spark, dir))
+    val base = pruned(spark.read.parquet(log.currentBase(spark, dir)))
+    val seqs = preSeqs.getOrElse(log.seqs(spark, dir))
     if (seqs.isEmpty) base
     else {
       val all = seqs.foldLeft(base.withColumn("_seq", lit(0))) { (acc, s) =>
         acc.unionByName(
-          pruned(spark.read.parquet(s"$dir/commits/$s/cells"))
+          pruned(spark.read.parquet(s"${log.commitDir(dir, s)}/cells"))
             .withColumn("_seq", lit(s)))
       }
-      val owners = seqs.map { s =>
-        spark.read.parquet(s"$dir/commits/$s/docs")
-          .select(col(m.idCol), lit(s).as("_live_seq"))
-      }.reduce(_.unionByName(_))
-        .groupBy(col(m.idCol)).agg(max("_live_seq").as("_live_seq"))
+      val owners = log.owners(spark, dir, seqs, m.idCol)
       val cols = base.columns.map(col).toSeq
       all.join(broadcast(owners), Seq(m.idCol), "left")
         .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
@@ -317,20 +287,11 @@ object GeoIndex {
     * [[VectorIndex.compact]].
     */
   def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = commitSeqs(spark, dir)
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val folded = live(spark, dir, None)
-    DeltaLog.installBase(spark, dir, "cells", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      folded.write.mode("overwrite").partitionBy("cell").parquet(tmp)
+      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit =
+    log.fold(spark, dir, keepGenerations, epoch) {
+      val folded = live(spark, dir, None)
+      tmp => folded.write.mode("overwrite").partitionBy("cell").parquet(tmp)
     }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
-  }
 
   /** Compact iff the commit log is deeper than `maxDeltas` — the
     * stats-driven auto-compaction policy of the shared mutation
@@ -338,11 +299,9 @@ object GeoIndex {
     * compaction ran.
     */
   def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = commitSeqs(spark, dir).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
-  }
+      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean =
+    log.maybeCompact(spark, dir, maxDeltas)(
+      compact(spark, dir, keepGenerations))
 
   /** One-row index health report:
     * `(n_points, n_cells, n_nonempty_cells, max_cell, skew,
@@ -362,7 +321,7 @@ object GeoIndex {
     val nCells = nLat.toLong * GeoJoin.lonCellCount(m.cellDeg)
     // one commit-log listing feeds both the depth gauge and the live
     // view's leg enumeration — no second filesystem walk
-    val seqs = commitSeqs(spark, dir)
+    val seqs = log.seqs(spark, dir)
     val pending = seqs.length
     live(spark, dir, None, preSeqs = Some(seqs))
       .groupBy("cell").agg(count(lit(1)).as("_n"))

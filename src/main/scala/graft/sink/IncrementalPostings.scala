@@ -36,21 +36,29 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalPostings {
 
+  /** Folded on [[stats]]' recommendation, not on depth alone. */
+  private[sink] val log = DeltaLog.Log("deltas", "base",
+    foldDue = (spark, dir, pending, maxDeltas) =>
+      recommended(spark, dir, pending, maxDeltas, touchedFraction = 0.2))
+
   // r18: isolated read session for the positional→flat derive (one per
   // parent session, memoized — newSession() builds a whole SessionState
   // and costs ~0.2 s, which showed up per init call when created inline).
   // Its one-shot conf (huge file-open cost ⇒ one scan partition per
   // file; oversized files still split) keeps the derived flat postings'
   // term-range layout file for file without perturbing concurrent legs
-  // of the parent session.
+  // of the parent session. Weakly keyed (the derived session holds no
+  // reference to its parent): the memo never pins a dropped session.
   private val filePerSplitSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private def filePerSplitSession(spark: SparkSession): SparkSession =
-    filePerSplitSessions.computeIfAbsent(spark, { s =>
-      val rs = s.newSession()
-      rs.conf.set("spark.sql.files.openCostInBytes", (1L << 40).toString)
-      rs
-    })
+    new java.util.WeakHashMap[SparkSession, SparkSession]()
+  private[sink] def filePerSplitSession(spark: SparkSession): SparkSession =
+    filePerSplitSessions.synchronized {
+      filePerSplitSessions.computeIfAbsent(spark, { s =>
+        val rs = s.newSession()
+        rs.conf.set("spark.sql.files.openCostInBytes", (1L << 40).toString)
+        rs
+      })
+    }
 
   /** Lay down the base index (sequence 0). `withPositions` makes the
     * index POSITIONAL — Lucene's positions data, phrase-query-capable
@@ -61,7 +69,7 @@ object IncrementalPostings {
   def init(docs: DataFrame, idCol: String, textCol: String,
       dir: String, withPositions: Boolean = false): Unit = {
     val spark = docs.sparkSession
-    DeltaLog.installBase(spark, dir, "base", fenceDomain = dir) { tmp =>
+    log.rebuild(spark, dir) { tmp =>
       // r17 (guide §1.2): ONE corpus tokenize pass feeds the whole base.
       // A positional init used to tokenize the corpus for postings AND
       // for positions (plus a range-sampling re-execution of each — see
@@ -74,7 +82,7 @@ object IncrementalPostings {
       // pass: they must keep zero-token docs, which have no postings row.
       // The norms leg is independent of the postings chain, so the two
       // run as concurrent jobs (guide §2.6).
-      DeltaLog.inParallel(
+      DeltaLog.inParallel(spark)(
         () =>
           if (withPositions) {
             InvertedIndex.writePostings(
@@ -96,16 +104,12 @@ object IncrementalPostings {
               s"$tmp/postings"),
         () => InvertedIndex.docLengths(docs, idCol, textCol)
           .write.mode("overwrite").parquet(s"$tmp/norms"))
-    }: Unit
-    DeltaLog.initRoot(spark, s"$dir/deltas")
+    }
   }
 
   private def hasPositions(spark: SparkSession, dir: String): Boolean =
     DeltaLog.fs(spark, dir).exists(
-      new Path(s"${DeltaLog.currentBase(spark, dir, "base")}/positional"))
-
-  private def deltaSeqs(spark: SparkSession, dir: String): Seq[Int] =
-    DeltaLog.listSeqs(spark, s"$dir/deltas", Some("docs"))
+      new Path(s"${log.currentBase(spark, dir)}/positional"))
 
   /** Commit one batch of upserted documents as a delta: postings + norms
     * for the batch, and the batch's ids as the ownership record. The
@@ -134,30 +138,27 @@ object IncrementalPostings {
         s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct); a delta owns " +
         "each doc once — pass an order column to dedupe last-writer-wins")
     val positional = hasPositions(spark, dir)
-    DeltaLog.commit(spark, s"$dir/deltas",
-        DeltaLog.nextSeq(spark, s"$dir/deltas"), "docs", fenceDomain = dir) { tmp =>
-      // r17: the 3–4 O(batch) legs are independent writes into the same
-      // pre-rename temp dir — run them as concurrent jobs (guide §2.6);
-      // on the positional index the flat postings derive from the
-      // written positional leg (tf ≡ size(positions) — the init
-      // equivalence), so the batch tokenizes twice, not three times
-      DeltaLog.inParallel(
-        () =>
-          if (positional) {
-            InvertedIndex.positionalPostings(docs, idCol, textCol)
-              .write.mode("overwrite").parquet(s"$tmp/positional")
-            spark.read.parquet(s"$tmp/positional")
-              .select(col("term"), col("doc_id"),
-                size(col("positions")).as("tf"))
-              .write.mode("overwrite").parquet(s"$tmp/postings")
-          } else
-            InvertedIndex.postings(docs, idCol, textCol)
-              .write.mode("overwrite").parquet(s"$tmp/postings"),
-        () => InvertedIndex.docLengths(docs, idCol, textCol)
-          .write.mode("overwrite").parquet(s"$tmp/norms"),
-        () => docs.select(col(idCol).cast("long").as("doc_id")).distinct()
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    // r17: the 3–4 O(batch) legs are independent writes into the same
+    // pre-rename temp dir, run as concurrent jobs (guide §2.6); on the
+    // positional index the flat postings derive from the written
+    // positional leg (tf ≡ size(positions) — the init equivalence), so
+    // the batch tokenizes twice, not three times
+    log.commit(spark, dir)(
+      tmp =>
+        if (positional) {
+          InvertedIndex.positionalPostings(docs, idCol, textCol)
+            .write.mode("overwrite").parquet(s"$tmp/positional")
+          spark.read.parquet(s"$tmp/positional")
+            .select(col("term"), col("doc_id"),
+              size(col("positions")).as("tf"))
+            .write.mode("overwrite").parquet(s"$tmp/postings")
+        } else
+          InvertedIndex.postings(docs, idCol, textCol)
+            .write.mode("overwrite").parquet(s"$tmp/postings"),
+      tmp => InvertedIndex.docLengths(docs, idCol, textCol)
+        .write.mode("overwrite").parquet(s"$tmp/norms"),
+      tmp => docs.select(col(idCol).cast("long").as("doc_id")).distinct()
+        .write.mode("overwrite").parquet(s"$tmp/docs"))
   }
 
   /** Last-writer-wins variant for batches that may carry several versions
@@ -193,44 +194,34 @@ object IncrementalPostings {
     val spark = ids.sparkSession
     val docs = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
     val positional = hasPositions(spark, dir)
-    DeltaLog.commit(spark, s"$dir/deltas",
-        DeltaLog.nextSeq(spark, s"$dir/deltas"), "docs", fenceDomain = dir) { tmp =>
-      // empty postings/norms with the right schemas: a delete owns the
-      // doc and contributes nothing. Independent legs → concurrent jobs
-      // (guide §2.6, r17)
-      DeltaLog.inParallel(
-        () => docs.limit(0)
-          .select(lit("").as("term"), col("doc_id"), lit(0).cast("int").as("tf"))
-          .write.mode("overwrite").parquet(s"$tmp/postings"),
-        () => docs.limit(0).select(col("doc_id"), lit(0).cast("int").as("dl"))
-          .write.mode("overwrite").parquet(s"$tmp/norms"),
-        () =>
-          if (positional)
-            docs.limit(0)
-              .select(lit("").as("term"), col("doc_id"),
-                array().cast("array<int>").as("positions"))
-              .write.mode("overwrite").parquet(s"$tmp/positional"),
-        () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    // empty postings/norms with the right schemas: a delete owns the
+    // doc and contributes nothing
+    log.commit(spark, dir)(
+      tmp => docs.limit(0)
+        .select(lit("").as("term"), col("doc_id"), lit(0).cast("int").as("tf"))
+        .write.mode("overwrite").parquet(s"$tmp/postings"),
+      tmp => docs.limit(0).select(col("doc_id"), lit(0).cast("int").as("dl"))
+        .write.mode("overwrite").parquet(s"$tmp/norms"),
+      tmp =>
+        if (positional)
+          docs.limit(0)
+            .select(lit("").as("term"), col("doc_id"),
+              array().cast("array<int>").as("positions"))
+            .write.mode("overwrite").parquet(s"$tmp/positional"),
+      tmp => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
   }
 
   /** One row per ever-touched doc: the highest sequence that wrote it. */
-  private def owners(spark: SparkSession, dir: String,
-      seqs: Seq[Int]): DataFrame =
-    seqs.map { s =>
-      spark.read.parquet(s"$dir/deltas/$s/docs")
-        .select(col("doc_id"), lit(s).as("_live_seq"))
-    }.reduce(_.unionByName(_))
-      .groupBy("doc_id").agg(max("_live_seq").as("_live_seq"))
+  private def owners(spark: SparkSession, dir: String, seqs: Seq[Int]) =
+    log.owners(spark, dir, seqs, "doc_id")
 
   private def resolve(spark: SparkSession, dir: String, sub: String,
       seqs: Seq[Int], ownersDf: Option[DataFrame],
       readBase: String => DataFrame): DataFrame = {
-    val base = readBase(
-      s"${DeltaLog.currentBase(spark, dir, "base")}/$sub")
+    val base = readBase(s"${log.currentBase(spark, dir)}/$sub")
       .withColumn("_seq", lit(0))
     val all = seqs.foldLeft(base) { (acc, s) =>
-      acc.unionByName(spark.read.parquet(s"$dir/deltas/$s/$sub")
+      acc.unionByName(spark.read.parquet(s"${log.commitDir(dir, s)}/$sub")
         .withColumn("_seq", lit(s)))
     }
     val cols = base.columns.filterNot(_ == "_seq").map(col).toSeq
@@ -250,7 +241,7 @@ object IncrementalPostings {
     * worth paying once.
     */
   def liveViews(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val seqs = deltaSeqs(spark, dir)
+    val seqs = log.seqs(spark, dir)
     val o = if (seqs.isEmpty) None else Some(owners(spark, dir, seqs))
     (resolve(spark, dir, "postings", seqs, o,
         p => InvertedIndex.readPostings(spark, p)),
@@ -273,7 +264,7 @@ object IncrementalPostings {
   def livePositional(spark: SparkSession, dir: String): DataFrame = {
     require(hasPositions(spark, dir),
       s"index at $dir was not initialized withPositions = true")
-    val seqs = deltaSeqs(spark, dir)
+    val seqs = log.seqs(spark, dir)
     val o = if (seqs.isEmpty) None else Some(owners(spark, dir, seqs))
     resolve(spark, dir, "positional", seqs, o, p => spark.read.parquet(p))
   }
@@ -313,7 +304,7 @@ object IncrementalPostings {
     * [[IndexSink.history]] contract on the postings layout.
     */
   def versions(spark: SparkSession, dir: String): Seq[Int] = {
-    0 +: deltaSeqs(spark, dir)
+    0 +: log.seqs(spark, dir)
   }
 
   /** TIME TRAVEL: BM25 as of commit `version` — the views resolved over
@@ -325,7 +316,7 @@ object IncrementalPostings {
     */
   def bm25SearchAt(spark: SparkSession, dir: String, version: Int,
       query: String, k: Int): DataFrame = {
-    val all = deltaSeqs(spark, dir)
+    val all = log.seqs(spark, dir)
     require(version == 0 || all.contains(version),
       s"no version $version at $dir (have ${(0 +: all).mkString(", ")}); " +
         "compaction folds history into version 0")
@@ -361,10 +352,14 @@ object IncrementalPostings {
     * scan. Never corpus-sized shuffles; safe to poll from a monitor loop.
     */
   def stats(spark: SparkSession, dir: String, maxDeltas: Int = 8,
-      touchedFraction: Double = 0.2): DataFrame = {
-    val seqs = deltaSeqs(spark, dir)
+      touchedFraction: Double = 0.2): DataFrame =
+    statsOf(spark, dir, log.seqs(spark, dir), maxDeltas, touchedFraction)
+
+  /** [[stats]] over an already-listed delta log. */
+  private def statsOf(spark: SparkSession, dir: String, seqs: Seq[Int],
+      maxDeltas: Int, touchedFraction: Double): DataFrame = {
     val nBase = spark.read
-      .parquet(s"${DeltaLog.currentBase(spark, dir, "base")}/norms").count()
+      .parquet(s"${log.currentBase(spark, dir)}/norms").count()
     val (touched, tombstones, nLive) =
       if (seqs.isEmpty) (0L, 0L, nBase)
       else {
@@ -372,7 +367,7 @@ object IncrementalPostings {
         val touched = o.count()
         // a doc is alive-in-the-log iff its OWNING delta wrote a norms row
         val deltaNorms = seqs.map(s =>
-          spark.read.parquet(s"$dir/deltas/$s/norms")
+          spark.read.parquet(s"${log.commitDir(dir, s)}/norms")
             .select(col("doc_id"), lit(s).as("_seq")))
           .reduce(_.unionByName(_))
         val aliveTouched = deltaNorms.join(broadcast(o), Seq("doc_id"))
@@ -400,11 +395,16 @@ object IncrementalPostings {
     */
   def maybeCompact(spark: SparkSession, dir: String, maxDeltas: Int = 8,
       touchedFraction: Double = 0.2, keepGenerations: Int = 1): Boolean = {
-    val rec = stats(spark, dir, maxDeltas, touchedFraction)
-      .select("compact_recommended").head().getBoolean(0)
+    val rec = recommended(spark, dir, log.seqs(spark, dir), maxDeltas,
+      touchedFraction)
     if (rec) compact(spark, dir, keepGenerations)
     rec
   }
+
+  private def recommended(spark: SparkSession, dir: String, seqs: Seq[Int],
+      maxDeltas: Int, touchedFraction: Double): Boolean =
+    statsOf(spark, dir, seqs, maxDeltas, touchedFraction)
+      .select("compact_recommended").head().getBoolean(0)
 
   /** Fold all deltas into a fresh term-sorted base — the only index-sized
     * write, run as maintenance (the `ParquetIndexSink.compactDeltas`
@@ -419,20 +419,17 @@ object IncrementalPostings {
     * [[VectorIndex.compact]].
     */
   def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = deltaSeqs(spark, dir)
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val positional =
-      if (hasPositions(spark, dir)) Some(livePositional(spark, dir)) else None
-    val (postings, norms) = liveViews(spark, dir)
-    DeltaLog.installBase(spark, dir, "base", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
+      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit =
+    log.fold(spark, dir, keepGenerations, epoch) {
+      val positional =
+        if (hasPositions(spark, dir)) Some(livePositional(spark, dir)) else None
+      val (postings, norms) = liveViews(spark, dir)
       // r17: the three folded views are independent resolutions —
       // concurrent jobs (guide §2.6); each writePostings persists its
       // input across the range sample (persistInput — the resolution
       // lineage here is a union + owner broadcast join per leg, far
       // heavier than its folded output)
-      DeltaLog.inParallel(
+      tmp => DeltaLog.inParallel(spark)(
         () => InvertedIndex.writePostings(postings, s"$tmp/postings",
           persistInput = true),
         () => norms.write.mode("overwrite").parquet(s"$tmp/norms"),
@@ -440,10 +437,4 @@ object IncrementalPostings {
           InvertedIndex.writePostings(p, s"$tmp/positional",
             persistInput = true)))
     }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/deltas/$s"), true))
-  }
 }

@@ -1,6 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -63,6 +62,8 @@ object SignatureStore {
   private final case class Meta(idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int, nPb: Int)
 
+  private[sink] val log = DeltaLog.Log("commits", "buckets")
+
   private def readMeta(spark: SparkSession, dir: String): Meta = {
     val r = spark.read.schema(metaSchema).parquet(s"$dir/meta").head()
     Meta(r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
@@ -96,34 +97,17 @@ object SignatureStore {
     // r17: meta and base are independent writes — concurrent jobs
     // (guide §2.6). r18: advisor's meta-before-install ordering measured
     // and rejected — rationale at GeoIndex.write.
-    DeltaLog.inParallel(
+    log.rebuild(spark, dir,
       () => spark.createDataFrame(
           spark.sparkContext.parallelize(
             Seq(Row(idCol, textCol, shingleN, numHashes, bands, nPb)), 1),
           metaSchema)
-        .write.mode("overwrite").parquet(s"$dir/meta"),
-      () => DeltaLog.installBase(spark, dir, "buckets", fenceDomain = dir) { tmp =>
-        signed(df, m)
-          .repartition(col("pb")).sortWithinPartitions("band", "bucket")
-          .write.mode("overwrite").partitionBy("pb").parquet(tmp)
-      }: Unit)
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+        .write.mode("overwrite").parquet(s"$dir/meta")) { tmp =>
+      signed(df, m)
+        .repartition(col("pb")).sortWithinPartitions("band", "bucket")
+        .write.mode("overwrite").partitionBy("pb").parquet(tmp)
+    }
   }
-
-  /** One row per ever-touched doc: the highest commit sequence that wrote
-    * (or tombstoned) it — the [[IncrementalPostings]] ownership design on
-    * the signature layout. None when the log is empty (base-only reads
-    * skip the join entirely).
-    */
-  private def owners(spark: SparkSession, dir: String,
-      seqs: Seq[Int]): Option[DataFrame] =
-    if (seqs.isEmpty) None
-    else Some(seqs.map { s =>
-        spark.read.parquet(s"$dir/commits/$s/docs")
-          .select(col("_id"), lit(s).as("_live_seq"))
-      }.reduce(_.unionByName(_))
-      .groupBy("_id").agg(max("_live_seq").as("_live_seq")))
 
   /** The store's LIVE banded rows, optionally pruned to a residue set:
     * base (partition-pruned, seq 0) plus each O(batch) commit leg,
@@ -136,21 +120,19 @@ object SignatureStore {
       pbs: Option[Seq[Int]]): DataFrame = {
     def prune(df: DataFrame) =
       pbs.fold(df)(r => df.filter(col("pb").isin(r: _*)))
-    val seqs = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
-    val base = prune(
-      spark.read.parquet(DeltaLog.currentBase(spark, dir, "buckets")))
+    val seqs = log.seqs(spark, dir)
+    val base = prune(spark.read.parquet(log.currentBase(spark, dir)))
       .withColumn("_seq", lit(0))
     val all = seqs.foldLeft(base) { (acc, s) =>
-      acc.unionByName(prune(spark.read.parquet(s"$dir/commits/$s/buckets"))
+      acc.unionByName(prune(spark.read.parquet(s"${log.commitDir(dir, s)}/buckets"))
         .withColumn("_seq", lit(s)))
     }
-    owners(spark, dir, seqs) match {
-      case None => all.drop("_seq")
-      case Some(o) => all
-        .join(broadcast(o), Seq("_id"), "left")
-        .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
-        .select("_id", "sig", "band", "bucket", "pb")
-    }
+    // base-only reads (empty log) skip the owner join entirely
+    if (seqs.isEmpty) all.drop("_seq")
+    else all
+      .join(broadcast(log.owners(spark, dir, seqs, "_id")), Seq("_id"), "left")
+      .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
+      .select("_id", "sig", "band", "bucket", "pb")
   }
 
   /** Candidate near-dup pairs for a NEW batch: every (batch doc, store
@@ -295,12 +277,9 @@ object SignatureStore {
     val rows = signed(batch, m).repartition(1)
       .sortWithinPartitions("band", "bucket")
     val docs = batch.select(col(m.idCol).as("_id")).distinct().coalesce(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "buckets", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent O(batch) legs → concurrent jobs (r17)
-        () => rows.write.mode("overwrite").parquet(s"$tmp/buckets"),
-        () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    log.commit(spark, dir)(
+      tmp => rows.write.mode("overwrite").parquet(s"$tmp/buckets"),
+      tmp => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
   }
 
   /** Sign ONCE, screen, commit — the steady-state ingest step fused:
@@ -323,16 +302,13 @@ object SignatureStore {
     // store legs resolve their commit list NOW — before the append
     val pairs = probeCore(spark, dir, m, q0, maxBucketOccupancy)
     val docs = batch.select(col(m.idCol).as("_id")).distinct().coalesce(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "buckets", fenceDomain = dir) { tmp =>
-      // one file per O(batch) commit leg: every later probe re-lists
-      // every commit's files, so leg file count is a serving cost. The
-      // coalesce reads the persisted blocks, not the signing lineage
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => q0.coalesce(1).sortWithinPartitions("band", "bucket")
-          .write.mode("overwrite").parquet(s"$tmp/buckets"),
-        () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    // one file per O(batch) commit leg: every later probe re-lists
+    // every commit's files, so leg file count is a serving cost. The
+    // coalesce reads the persisted blocks, not the signing lineage
+    log.commit(spark, dir)(
+      tmp => q0.coalesce(1).sortWithinPartitions("band", "bucket")
+        .write.mode("overwrite").parquet(s"$tmp/buckets"),
+      tmp => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
     pairs
   }
 
@@ -352,12 +328,9 @@ object SignatureStore {
       array().cast("array<bigint>").as("sig"),
       lit(0).cast("int").as("band"), lit(0L).as("bucket"),
       lit(0).cast("int").as("pb"))
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => emptyBuckets.write.mode("overwrite").parquet(s"$tmp/buckets"),
-        () => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    log.commit(spark, dir)(
+      tmp => emptyBuckets.write.mode("overwrite").parquet(s"$tmp/buckets"),
+      tmp => docs.write.mode("overwrite").parquet(s"$tmp/docs"))
   }
 
   /** Fold the commit log into a fresh residue-partitioned base — the only
@@ -368,22 +341,13 @@ object SignatureStore {
     * [[VectorIndex.compact]].
     */
   def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val folded = bucketRows(spark, dir, None)
-    DeltaLog.installBase(spark, dir, "buckets", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      folded
+      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit =
+    log.fold(spark, dir, keepGenerations, epoch) {
+      val folded = bucketRows(spark, dir, None)
+      tmp => folded
         .repartition(col("pb")).sortWithinPartitions("band", "bucket")
         .write.mode("overwrite").partitionBy("pb").parquet(tmp)
     }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
-  }
 
   /** One-row health report: `(n_docs, n_rows, n_pending_commits,
     * compact_recommended)` — log depth is the compaction signal (each
@@ -393,7 +357,7 @@ object SignatureStore {
     */
   def stats(spark: SparkSession, dir: String,
       maxDeltas: Int = 8): DataFrame = {
-    val pending = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs")).length
+    val pending = log.seqs(spark, dir).length
     bucketRows(spark, dir, None)
       .agg(count_distinct(col("_id")).as("n_docs"),
         count(lit(1)).as("n_rows"))
@@ -408,9 +372,7 @@ object SignatureStore {
     * whether a compaction ran.
     */
   def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs")).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
-  }
+      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean =
+    log.maybeCompact(spark, dir, maxDeltas)(
+      compact(spark, dir, keepGenerations))
 }

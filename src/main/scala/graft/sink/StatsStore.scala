@@ -1,6 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,6 +32,8 @@ import org.apache.spark.sql.types._
   * type), so heterogeneous columns share one binary sketch column.
   */
 object StatsStore {
+
+  private[sink] val log = DeltaLog.Log("commits", "base", markerChild = "stats")
 
   private val metaSchema = StructType(Seq(
     StructField("col_name", StringType, nullable = false),
@@ -167,12 +168,10 @@ object StatsStore {
         spark.sparkContext.parallelize(kinds.map { case (c, k) => Row(c, k) }, 1),
         metaSchema)
       .write.mode("overwrite").parquet(s"$dir/meta")
-    DeltaLog.installBase(spark, dir, "base", fenceDomain = dir) { tmp =>
+    log.rebuild(spark, dir) { tmp =>
       partials(df, kinds.sorted, lgK).coalesce(1)
         .write.mode("overwrite").parquet(tmp)
-    }: Unit
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
+    }
   }
 
   /** Contribute a batch: ONE commit holding #columns partial rows —
@@ -184,20 +183,18 @@ object StatsStore {
     val spark = batch.sparkSession
     val cols = readMeta(spark, dir)
     val rows = partials(batch, cols, lgK).coalesce(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "stats", fenceDomain = dir) { tmp =>
-      rows.write.mode("overwrite").parquet(s"$tmp/stats")
-    }
+    log.commit(spark, dir)(
+      tmp => rows.write.mode("overwrite").parquet(s"$tmp/stats"))
   }
 
   private def partialRows(spark: SparkSession, dir: String): DataFrame = {
-    val base = spark.read.parquet(DeltaLog.currentBase(spark, dir, "base"))
+    val base = spark.read.parquet(log.currentBase(spark, dir))
     // allowMissingColumns: a base written before the qtiles column (the
     // supported legacy layout) unions with qtiles-bearing commits — its
     // rows read null there, which folds correctly through the
     // isNotNull filter in mergedQuantileRows
-    DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats"))
-      .map(s => spark.read.parquet(s"$dir/commits/$s/stats"))
+    log.seqs(spark, dir)
+      .map(s => spark.read.parquet(s"${log.commitDir(dir, s)}/stats"))
       .foldLeft(base)(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -226,41 +223,32 @@ object StatsStore {
     * may call, from where, `epoch`): [[VectorIndex.compact]].
     */
   def compact(spark: SparkSession, dir: String,
-      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats"))
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val rows = partialRows(spark, dir)
-    val folded = rows
-      .groupBy("col_name")
-      .agg(
-        sum("n_nonnull").as("n_nonnull"),
-        sum("n_null").as("n_null"),
-        min("min_num").as("min_num"),
-        max("max_num").as("max_num"),
-        min("min_str").as("min_str"),
-        max("max_str").as("max_str"),
-        hll_union_agg(col("hll"), lit(true)).as("hll"))
-      // the fold's quantile summary is the weighted merge re-gridded to
-      // the standard 99 points — numeric columns keep their percentile
-      // view across compactions, string columns stay null
-      .join(mergedQuantileRows(rows, QuantileProbs), Seq("col_name"), "left")
-    DeltaLog.installBase(spark, dir, "base", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      folded.coalesce(1).write.mode("overwrite").parquet(tmp)
+      keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit =
+    log.fold(spark, dir, keepGenerations, epoch) {
+      val rows = partialRows(spark, dir)
+      val folded = rows
+        .groupBy("col_name")
+        .agg(
+          sum("n_nonnull").as("n_nonnull"),
+          sum("n_null").as("n_null"),
+          min("min_num").as("min_num"),
+          max("max_num").as("max_num"),
+          min("min_str").as("min_str"),
+          max("max_str").as("max_str"),
+          hll_union_agg(col("hll"), lit(true)).as("hll"))
+        // the fold's quantile summary is the weighted merge re-gridded
+        // to the standard 99 points — numeric columns keep their
+        // percentile view across compactions, string columns stay null
+        .join(mergedQuantileRows(rows, QuantileProbs), Seq("col_name"), "left")
+      tmp => folded.coalesce(1).write.mode("overwrite").parquet(tmp)
     }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
-  }
 
   /** One-row health report: `(n_cols, n_pending_commits)` — commit depth
     * is the compaction signal (each pending commit adds one tiny scan
     * leg to every profile read).
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
-    val pending = DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats")).length
+    val pending = log.seqs(spark, dir).length
     spark.read.schema(metaSchema).parquet(s"$dir/meta")
       .agg(count(lit(1)).as("n_cols"))
       .select(col("n_cols"), lit(pending).cast("long").as("n_pending_commits"))
@@ -271,9 +259,7 @@ object StatsStore {
     * persisted store's hook. Returns whether a compaction ran.
     */
   def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats")).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
-  }
+      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean =
+    log.maybeCompact(spark, dir, maxDeltas)(
+      compact(spark, dir, keepGenerations))
 }

@@ -2,7 +2,7 @@ package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** One dispatcher for the five persisted incremental stores, keyed by the
+/** One registry of the five persisted incremental stores, keyed by the
   * operator-facing kind names the [[graft.tools.Maintenance]] CLI and
   * [[graft.runtime.PipelineRunner]] share. Exists so retention has exactly
   * one code path from a configured `keepGenerations` to each store's
@@ -10,36 +10,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * with two hand-rolled dispatch copies is how one of them goes stale.
   */
 object Stores {
-  val Kinds: Seq[String] = Seq("postings", "vector", "signature", "geo", "stats")
+
+  /** A store kind: its commit log, read-only health frame and fold. */
+  private final case class Kind(log: DeltaLog.Log,
+      stats: (SparkSession, String) => DataFrame,
+      compact: (SparkSession, String, Int) => Unit)
+
+  private val registry: Seq[(String, Kind)] = Seq(
+    "postings" -> Kind(IncrementalPostings.log,
+      IncrementalPostings.stats(_, _), IncrementalPostings.compact(_, _, _)),
+    "vector" -> Kind(VectorIndex.log, VectorIndex.stats, VectorIndex.compact(_, _, _)),
+    "signature" -> Kind(SignatureStore.log, SignatureStore.stats(_, _), SignatureStore.compact(_, _, _)),
+    "geo" -> Kind(GeoIndex.log, GeoIndex.stats, GeoIndex.compact(_, _, _)),
+    "stats" -> Kind(StatsStore.log, StatsStore.stats, StatsStore.compact(_, _, _)))
+
+  val Kinds: Seq[String] = registry.map(_._1)
+
+  private def kind(name: String): Kind =
+    registry.collectFirst { case (`name`, k) => k }.getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown store kind '$name' (expected one of ${Kinds.mkString(", ")})"))
 
   /** Read-only health frame for `kind` at `dir`. */
   def stats(spark: SparkSession, kind: String, dir: String): DataFrame =
-    kind match {
-      case "postings" => IncrementalPostings.stats(spark, dir)
-      case "vector" => VectorIndex.stats(spark, dir)
-      case "signature" => SignatureStore.stats(spark, dir)
-      case "geo" => GeoIndex.stats(spark, dir)
-      case "stats" => StatsStore.stats(spark, dir)
-      case other => throw new IllegalArgumentException(
-        s"unknown store kind '$other' (expected one of ${Kinds.mkString(", ")})")
-    }
+    this.kind(kind).stats(spark, dir)
 
   /** Pending (un-folded) commit count for `kind` at `dir` — one
     * metadata listing of the store's commit log, cheap enough to probe
-    * between every batch. The paths/tags mirror each store's own
-    * `commitSeqs`/`deltaSeqs` helper.
+    * between every batch.
     */
   def pendingCommits(spark: SparkSession, kind: String, dir: String): Int =
-    kind match {
-      case "postings" =>
-        DeltaLog.listSeqs(spark, s"$dir/deltas", Some("docs")).length
-      case "vector" | "signature" | "geo" =>
-        DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs")).length
-      case "stats" =>
-        DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats")).length
-      case other => throw new IllegalArgumentException(
-        s"unknown store kind '$other' (expected one of ${Kinds.mkString(", ")})")
-    }
+    this.kind(kind).log.seqs(spark, dir).length
 
   /** Threshold-gated compaction — the dispatch twin of each store's
     * `maybeCompact` hook, for callers holding only a (kind, dir) pair
@@ -50,26 +51,16 @@ object Stores {
     * commits, the store's own policy decides (depth > `maxDeltas`;
     * postings additionally folds on its touched-docs fraction) —
     * `maxDeltas = 0` therefore means "fold whenever anything is
-    * pending", the amortization-free per-batch posture. Returns whether
-    * a compaction ran.
+    * pending", the amortization-free per-batch posture. The log is
+    * listed once for both decisions. Returns whether a compaction ran.
     */
   def maybeCompact(spark: SparkSession, kind: String, dir: String,
       maxDeltas: Int = 0, keepGenerations: Int = 1): Boolean = {
-    if (pendingCommits(spark, kind, dir) == 0) false
-    else kind match {
-      case "postings" => IncrementalPostings.maybeCompact(spark, dir,
-        maxDeltas = maxDeltas, keepGenerations = keepGenerations)
-      case "vector" => VectorIndex.maybeCompact(spark, dir, maxDeltas,
-        keepGenerations)
-      case "signature" => SignatureStore.maybeCompact(spark, dir, maxDeltas,
-        keepGenerations)
-      case "geo" => GeoIndex.maybeCompact(spark, dir, maxDeltas,
-        keepGenerations)
-      case "stats" => StatsStore.maybeCompact(spark, dir, maxDeltas,
-        keepGenerations)
-      case other => throw new IllegalArgumentException(
-        s"unknown store kind '$other' (expected one of ${Kinds.mkString(", ")})")
-    }
+    val k = this.kind(kind)
+    val pending = k.log.seqs(spark, dir)
+    val due = pending.nonEmpty && k.log.foldDue(spark, dir, pending, maxDeltas)
+    if (due) k.compact(spark, dir, keepGenerations)
+    due
   }
 
   /** Fold `kind`'s pending commits into a fresh sealed base generation,
@@ -79,13 +70,6 @@ object Stores {
     * one), so calling from a second JVM against a live writer fences it.
     */
   def compact(spark: SparkSession, kind: String, dir: String,
-      keepGenerations: Int): Unit = kind match {
-    case "postings" => IncrementalPostings.compact(spark, dir, keepGenerations)
-    case "vector" => VectorIndex.compact(spark, dir, keepGenerations)
-    case "signature" => SignatureStore.compact(spark, dir, keepGenerations)
-    case "geo" => GeoIndex.compact(spark, dir, keepGenerations)
-    case "stats" => StatsStore.compact(spark, dir, keepGenerations)
-    case other => throw new IllegalArgumentException(
-      s"unknown store kind '$other' (expected one of ${Kinds.mkString(", ")})")
-  }
+      keepGenerations: Int): Unit =
+    this.kind(kind).compact(spark, dir, keepGenerations)
 }

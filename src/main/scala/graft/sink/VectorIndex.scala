@@ -1,6 +1,5 @@
 package graft.sink
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -56,6 +55,8 @@ object VectorIndex {
 
   private final case class Meta(idCol: String, vecCol: String, dim: Int)
 
+  private[sink] val log = DeltaLog.Log("commits", "cells")
+
   // The schema contract and the k-means model are immutable between
   // rebuilds (upsert/delete/compact never touch them), and the module is
   // single-writer — so both memoize per (session, dir), invalidated by
@@ -103,22 +104,18 @@ object VectorIndex {
     // r18: advisor's meta-before-install ordering measured and rejected
     // (x_knn_indexed +14%, x_sim_ivf_stats +17%) — rationale at
     // GeoIndex.write.
-    DeltaLog.inParallel(
+    log.rebuild(spark, dir,
       () => spark.createDataFrame(
           spark.sparkContext.parallelize(centroidRows.toSeq, 1), centroidSchema)
         .write.mode("overwrite").parquet(s"$dir/centroids"),
       () => spark.createDataFrame(
           spark.sparkContext.parallelize(
             Seq(Row(idCol, vecCol, model.centroids.head.length)), 1), metaSchema)
-        .write.mode("overwrite").parquet(s"$dir/meta"),
-      () => DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir) { tmp =>
-        Ivf.assign(df.filter(col(vecCol).isNotNull), vecCol, model)
-          .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-      }: Unit)
+        .write.mode("overwrite").parquet(s"$dir/meta")) { tmp =>
+      Ivf.assign(df.filter(col(vecCol).isNotNull), vecCol, model)
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    }
     writeRadii(spark, dir, vecCol)
-    // a rebuild starts a fresh history: everything live is in the base
-    DeltaLog.fs(spark, dir).delete(new Path(s"$dir/commits"), true)
-    DeltaLog.initRoot(spark, s"$dir/commits")
     // the rebuild replaced the contract + model: refresh the memos
     metaCache.put((spark, dir), Meta(idCol, vecCol, model.centroids.head.length))
     modelCache.put((spark, dir), model)
@@ -157,18 +154,7 @@ object VectorIndex {
       dir: String): Int = {
     val spark = df.sparkSession
     val m = checkMeta(spark, dir, idCol, vecCol)
-    // ONE aggregate action rejects BOTH commit-corrupting id shapes: a
-    // null id (invisible to the equality-keyed owner join — the row could
-    // never be superseded or deleted) and a duplicated id (two versions
-    // would both survive the one-owner-sequence-per-id filter)
-    val g = df.agg(count(lit(1)).as("n"),
-      count_distinct(col(idCol)).as("nd"),
-      count(when(col(idCol).isNull, 1)).as("nn")).head()
-    require(g.getLong(2) == 0 && g.getLong(0) == g.getLong(1),
-      s"upsert: batch carries a null or duplicated '$idCol' " +
-        s"(${g.getLong(0)} rows, ${g.getLong(1)} distinct non-null ids); " +
-        "a commit owns each non-null id once — dedupe last-writer-wins " +
-        "upstream")
+    log.requireOwnable(df, idCol)
     val model = loadModel(spark, dir)
     // one file per O(batch) commit leg, cell-sorted for row-group
     // pruning: the batch inherits the source scan's partitioning (32
@@ -177,17 +163,14 @@ object VectorIndex {
     // SERVING cost, not just a write cost
     val assigned = Ivf.assign(checkedBatch(df, vecCol, m.dim), vecCol, model)
       .coalesce(1).sortWithinPartitions("cell")
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      // r17: the two O(batch) legs are independent — concurrent jobs
-      // (guide §2.6); the docs leg derives from `assigned`, not from the
-      // raw df, because checkedBatch DROPS null-vector rows and a doc id
-      // must not be tombstoned by a row that contributed no vector
-      DeltaLog.inParallel(
-        () => assigned.write.mode("overwrite").parquet(s"$tmp/cells"),
-        () => assigned.select(col(idCol)).distinct()
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    // r17: the two O(batch) legs are independent — concurrent jobs
+    // (guide §2.6); the docs leg derives from `assigned`, not from the
+    // raw df, because checkedBatch DROPS null-vector rows and a doc id
+    // must not be tombstoned by a row that contributed no vector
+    log.commit(spark, dir)(
+      tmp => assigned.write.mode("overwrite").parquet(s"$tmp/cells"),
+      tmp => assigned.select(col(idCol)).distinct()
+        .write.mode("overwrite").parquet(s"$tmp/docs"))
   }
 
   /** Delete by key: the ids claim ownership with no vectors — a keyed
@@ -199,19 +182,7 @@ object VectorIndex {
     val m = readMeta(spark, dir)
     require(m.idCol == idCol,
       s"index at $dir is keyed by '${m.idCol}', not '$idCol'")
-    // an empty vectors file with the BASE's schema so resolution's
-    // unionByName sees every commit leg schema-complete
-    val baseSchema = spark.read
-      .parquet(DeltaLog.currentBase(spark, dir, "cells")).schema
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], baseSchema).repartition(1)
-    DeltaLog.commit(spark, s"$dir/commits",
-        DeltaLog.nextSeq(spark, s"$dir/commits"), "docs", fenceDomain = dir) { tmp =>
-      DeltaLog.inParallel( // independent legs → concurrent jobs (r17)
-        () => empty.write.mode("overwrite").parquet(s"$tmp/cells"),
-        () => ids.select(col(idCol)).distinct().coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/docs"))
-    }
+    log.commitTombstones(spark, dir, ids, idCol, "cells")
   }
 
   /** Insert-only alias kept for the ingestion shape where ids are known
@@ -235,9 +206,6 @@ object VectorIndex {
       Ivf.Model(rows.map(_.getSeq[Double](1).toArray))
     })
 
-  private def commitSeqs(spark: SparkSession, dir: String): Seq[Int] =
-    DeltaLog.listSeqs(spark, s"$dir/commits", Some("docs"))
-
   /** Per-cell max member-to-centroid ANGLE of the BASE layout — the
     * prune bound [[radiusSearch]] uses. Written at [[write]] and
     * recomputed at [[compact]]; between compactions mutations only
@@ -248,7 +216,7 @@ object VectorIndex {
   private def writeRadii(spark: SparkSession, dir: String,
       vecCol: String): Unit = {
     val cents = spark.read.parquet(s"$dir/centroids")
-    spark.read.parquet(DeltaLog.currentBase(spark, dir, "cells"))
+    spark.read.parquet(log.currentBase(spark, dir))
       .join(broadcast(cents), "cell")
       .select(col("cell"),
         acos(least(lit(1.0), greatest(lit(-1.0),
@@ -278,21 +246,17 @@ object VectorIndex {
   private def cellsPruned(spark: SparkSession, dir: String,
       baseCells: Option[Seq[Int]]): DataFrame = {
     val m = readMeta(spark, dir)
-    val seqs = commitSeqs(spark, dir)
-    val base0 = spark.read.parquet(DeltaLog.currentBase(spark, dir, "cells"))
+    val seqs = log.seqs(spark, dir)
+    val base0 = spark.read.parquet(log.currentBase(spark, dir))
     val base = baseCells.fold(base0)(cs =>
       base0.filter(col("cell").isin(cs: _*)))
     if (seqs.isEmpty) base
     else {
       val all = seqs.foldLeft(base.withColumn("_seq", lit(0))) { (acc, s) =>
-        acc.unionByName(spark.read.parquet(s"$dir/commits/$s/cells")
+        acc.unionByName(spark.read.parquet(s"${log.commitDir(dir, s)}/cells")
           .withColumn("_seq", lit(s)))
       }
-      val owners = seqs.map { s =>
-        spark.read.parquet(s"$dir/commits/$s/docs")
-          .select(col(m.idCol), lit(s).as("_live_seq"))
-      }.reduce(_.unionByName(_))
-        .groupBy(col(m.idCol)).agg(max("_live_seq").as("_live_seq"))
+      val owners = log.owners(spark, dir, seqs, m.idCol)
       val cols = base.columns.map(col).toSeq
       all.join(broadcast(owners), Seq(m.idCol), "left")
         .filter(col("_seq") === coalesce(col("_live_seq"), lit(0)))
@@ -317,23 +281,17 @@ object VectorIndex {
     */
   def compact(spark: SparkSession, dir: String,
       keepGenerations: Int = 1, epoch: WriterEpoch = null): Unit = {
-    val seqs = commitSeqs(spark, dir)
-    if (seqs.isEmpty) return
-    val we = DeltaLog.resolveEpoch(spark, dir, epoch)
-    val live = cells(spark, dir)
-    DeltaLog.installBase(spark, dir, "cells", keepGenerations, fenceDomain = dir, epoch = we) { tmp =>
-      live.write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }: Unit
-    // fenced since the install => never GC the folded log: a
-    // zombie compactor must not delete commits a rival's view holds
-    DeltaLog.checkFence(spark, we)
-    val f = DeltaLog.fs(spark, dir)
-    seqs.foreach(s => f.delete(new Path(s"$dir/commits/$s"), true))
+    val folded = log.fold(spark, dir, keepGenerations, epoch) {
+      val live = cells(spark, dir)
+      tmp => live.write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    }
     // the folded base has new membership: tighten the radius bounds —
     // behind its own fence check (radii is a plain overwrite a zombie
     // could otherwise clobber after the rival took the store)
-    DeltaLog.checkFence(spark, we)
-    writeRadii(spark, dir, readMeta(spark, dir).vecCol)
+    if (folded) {
+      DeltaLog.checkFence(spark, DeltaLog.resolveEpoch(spark, dir, epoch))
+      writeRadii(spark, dir, readMeta(spark, dir).vecCol)
+    }
   }
 
   /** Top-k by cosine reading ONLY the `nProbe` probed cell directories —
@@ -503,7 +461,7 @@ object VectorIndex {
     */
   def stats(spark: SparkSession, dir: String): DataFrame = {
     val k = loadModel(spark, dir).k
-    val pending = commitSeqs(spark, dir).length
+    val pending = log.seqs(spark, dir).length
     cellCounts(spark, dir)
       .agg(coalesce(sum("n_vectors"), lit(0L)).as("n_vectors"),
         count(lit(1)).as("n_nonempty"),
@@ -528,9 +486,7 @@ object VectorIndex {
     * because the remedy there is a re-[[write]], not a fold.
     */
   def maybeCompact(spark: SparkSession, dir: String,
-      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean = {
-    val rec = commitSeqs(spark, dir).length > maxDeltas
-    if (rec) compact(spark, dir, keepGenerations)
-    rec
-  }
+      maxDeltas: Int = 8, keepGenerations: Int = 1): Boolean =
+    log.maybeCompact(spark, dir, maxDeltas)(
+      compact(spark, dir, keepGenerations))
 }

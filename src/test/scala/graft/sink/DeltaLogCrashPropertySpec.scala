@@ -19,11 +19,6 @@ import graft.SparkSpec
   *      generation, complete and sealed — a crashed install never
   *      shadows it — and the previous `keepGenerations` installed
   *      generations stay complete on disk for in-flight readers.
-  *
-  * Schedules always OPEN with a real commit, because a store is born
-  * through the marker protocol (init/write), which also seals the root
-  * as adopted — so the adoption sweep can never mistake a later crashed
-  * commit for a legacy one (the premature-seal hazard).
   */
 class DeltaLogCrashPropertySpec extends SparkSpec {
 
@@ -42,14 +37,7 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
 
   private val Keep = 2
 
-  /** `legacy` > 0 starts the schedule as a PRE-MARKER store: that many
-    * complete marker-less commits and no root sentinel — the upgrade
-    * scenario. The first access (the prepended Read) must adopt them
-    * all; every later marker-less dir is a torn commit and must stay
-    * invisible (the writer's sentinel-before-rename ordering is what
-    * makes the two distinguishable).
-    */
-  private def runSchedule(ops: List[Op], legacy: Int = 0): Boolean = {
+  private def runSchedule(ops: List[Op]): Boolean = {
     val dir = java.nio.file.Files.createTempDirectory("dlog-prop").toString
     val root = s"$dir/commits"
     val f = DeltaLog.fs(spark, dir)
@@ -67,23 +55,17 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
       (ns :+ 0).max + 1
     }
     def check(): Boolean = {
-      val seqs = DeltaLog.listSeqs(spark, root, Some("docs"))
-      // before the first WRITE seals the root, legacy commits are
-      // adopted in memory (no on-disk marker yet — reads never write);
-      // once the sentinel exists every listed seq must be sealed
-      val rootAdopted =
-        f.exists(new Path(s"$root/${DeltaLog.AdoptedMarker}"))
+      val seqs = DeltaLog.listSeqs(spark, root)
       val listOk = seqs == committed && seqs.forall { s =>
         f.exists(new Path(s"$root/$s/docs/c$s")) &&
-          (!rootAdopted ||
-            f.exists(new Path(s"$root/$s/${DeltaLog.CommitMarker}")))
+          f.exists(new Path(s"$root/$s/${DeltaLog.CommitMarker}"))
       }
-      val cur = DeltaLog.currentBase(spark, dir, "base")
+      val cur = scala.util.Try(DeltaLog.currentBase(spark, dir, "base"))
       val baseOk =
-        if (installed.isEmpty) cur == s"$dir/base" // legacy fallback path
-        else cur == installed.last._1 &&
-          f.exists(new Path(s"$cur/${DeltaLog.CommitMarker}")) &&
-          f.exists(new Path(s"$cur/docs/${installed.last._2}"))
+        if (installed.isEmpty) cur.isFailure // no sealed generation yet
+        else cur.get == installed.last._1 &&
+          f.exists(new Path(s"${cur.get}/${DeltaLog.CommitMarker}")) &&
+          f.exists(new Path(s"${cur.get}/docs/${installed.last._2}"))
       // a reader pinned up to Keep installs ago still has its base
       val pinnedOk = installed.dropRight(1).takeRight(Keep).forall {
         case (p, t) =>
@@ -93,15 +75,7 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
       listOk && baseOk && pinnedOk
     }
 
-    var i = 1
-    while (i <= legacy) { // complete pre-marker commits, no sentinels
-      f.mkdirs(new Path(s"$root/$i/docs"))
-      f.create(new Path(s"$root/$i/docs/c$i"), true).close()
-      committed :+= i
-      i += 1
-    }
-    val lead: List[Op] = if (legacy > 0) List(Read, Commit) else List(Commit)
-    (lead ++ ops).forall { op =>
+    ops.forall { op =>
       op match {
         case Commit =>
           val seq = DeltaLog.nextSeq(spark, root)
@@ -131,22 +105,11 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
     assert(result.passed, result.status.toString)
   }
 
-  test("legacy pre-marker stores keep their history under any later schedule") {
-    val prop = Prop.forAll(Gen.choose(1, 4), Gen.listOfN(12, opGen)) {
-      (k, ops) => runSchedule(ops, legacy = k)
-    }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
-    assert(result.passed, result.status.toString)
-  }
-
-  test("r11-upgrade roots: marker-less dirs never auto-adopt once any seal exists") {
-    // random pre-sentinel on-disk states: every numeric dir complete,
-    // some sealed (marker-era commits), some not. With ANY seal present
-    // a marker-less dir is ambiguous (possibly a crashed marker-era
-    // commit whose batch was retried) and must stay invisible; with NO
-    // seal the store is purely pre-marker and all of it is adopted.
-    // Reads must never persist anything either way.
+  test("mixed roots: listSeqs returns exactly the sealed dirs") {
+    // random on-disk states: every numeric dir complete, some sealed,
+    // some not (crashed between rename and seal, or mid-copy). Only the
+    // sealed ones are commits, and a read persists nothing — no marker
+    // appears on an unsealed dir
     val prop = Prop.forAll(
       Gen.listOfN(8, Gen.oneOf(true, false)).suchThat(_.nonEmpty)) { flags =>
       val dir = java.nio.file.Files.createTempDirectory("dlog-mixed").toString
@@ -159,63 +122,15 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
           f.create(
             new Path(s"$root/${i + 1}/${DeltaLog.CommitMarker}"), true).close()
       }
-      val expected =
-        if (flags.contains(true))
-          flags.zipWithIndex.collect { case (true, i) => i + 1 }
-        else flags.indices.map(_ + 1).toList
-      val got = DeltaLog.listSeqs(spark, root, Some("docs")).toList
-      val persisted =
-        f.exists(new Path(s"$root/${DeltaLog.AdoptedMarker}")) ||
-          flags.zipWithIndex.exists { case (sealedDir, i) =>
-            !sealedDir && f.exists(
-              new Path(s"$root/${i + 1}/${DeltaLog.CommitMarker}"))
-          }
+      val expected = flags.zipWithIndex.collect { case (true, i) => i + 1 }
+      val before = f.listStatus(new Path(root)).length
+      val got = DeltaLog.listSeqs(spark, root).toList
+      val persisted = f.listStatus(new Path(root)).length != before ||
+        flags.zipWithIndex.exists { case (sealedDir, i) =>
+          !sealedDir && f.exists(
+            new Path(s"$root/${i + 1}/${DeltaLog.CommitMarker}"))
+        }
       got == expected && !persisted
-    }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
-    assert(result.passed, result.status.toString)
-  }
-
-  test("crashed adoption sweeps: every crash point resumes, nothing orphaned") {
-    // the write path's sweep protocol is intent → seal… → AdoptedMarker
-    // → delete intent; a crash at ANY point must leave a state from
-    // which reads see the full legacy history and the next write
-    // completes the sweep. k seals done before the crash; the
-    // AdoptedMarker-written state is only reachable with all n sealed.
-    val prop = Prop.forAll(Gen.choose(1, 5), Gen.choose(0, 6),
-        Gen.oneOf(true, false)) { (n, kRaw, markerIfDone) =>
-      val k = math.min(kRaw, n)
-      val dir =
-        java.nio.file.Files.createTempDirectory("dlog-sweepcrash").toString
-      val root = s"$dir/commits"
-      val f = DeltaLog.fs(spark, dir)
-      (1 to n).foreach { i =>
-        f.mkdirs(new Path(s"$root/$i/docs"))
-        f.create(new Path(s"$root/$i/docs/c$i"), true).close()
-      }
-      f.create(new Path(s"$root/${DeltaLog.AdoptingMarker}"), true).close()
-      (1 to k).foreach(i =>
-        f.create(new Path(s"$root/$i/${DeltaLog.CommitMarker}"), true).close())
-      val markerWritten = markerIfDone && k == n
-      if (markerWritten)
-        f.create(new Path(s"$root/${DeltaLog.AdoptedMarker}"), true).close()
-      val expect = (1 to n).toList
-      val readOk =
-        DeltaLog.listSeqs(spark, root, Some("docs")).toList == expect
-      val seq = DeltaLog.nextSeq(spark, root)
-      DeltaLog.commit(spark, root, seq, "docs", fenceDomain = root) { tmp =>
-        f.mkdirs(new Path(s"$tmp/docs"))
-        f.create(new Path(s"$tmp/docs/c$seq"), true).close()
-      }
-      val afterOk =
-        DeltaLog.listSeqs(spark, root, Some("docs")).toList == expect :+ seq
-      val sealedOk = (1 to n).forall(i =>
-        f.exists(new Path(s"$root/$i/${DeltaLog.CommitMarker}")))
-      val cleanOk =
-        f.exists(new Path(s"$root/${DeltaLog.AdoptedMarker}")) &&
-          !f.exists(new Path(s"$root/${DeltaLog.AdoptingMarker}"))
-      readOk && afterOk && sealedOk && cleanOk
     }
     val result = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
@@ -245,7 +160,6 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
       val dir = java.nio.file.Files.createTempDirectory("dlog-fence").toString
       val root = s"$dir/commits"
       val f = DeltaLog.fs(spark, dir)
-      DeltaLog.initRoot(spark, root)
       def payload(path: String, tag: String): Unit = {
         f.mkdirs(new Path(s"$path/docs"))
         f.create(new Path(s"$path/docs/$tag"), true).close()
@@ -264,12 +178,10 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
           fenceDomain = dir, epoch = we)(payload(_, tag))
         installs :+= (p -> tag)
       }
-      def viewOk(): Boolean = {
-        val seqs = DeltaLog.listSeqs(spark, root, Some("docs"))
-        val cur = DeltaLog.currentBase(spark, dir, "base")
-        seqs == committed &&
-          (installs.isEmpty || cur == installs.last._1)
-      }
+      def viewOk(): Boolean =
+        DeltaLog.listSeqs(spark, root) == committed &&
+          (installs.isEmpty ||
+            DeltaLog.currentBase(spark, dir, "base") == installs.last._1)
       val w1 = DeltaLog.acquireEpoch(spark, dir)
       // before the rival exists, the stale-to-be writer works normally
       pre.foreach {
@@ -278,7 +190,7 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
       }
       val w2 = DeltaLog.acquireEpoch(spark, dir)
       // the generation the live writer's readers lease at takeover
-      val leased = DeltaLog.currentBase(spark, dir, "base")
+      val leased = installs.lastOption.map(_._1)
       var liveInstalls = 0
       val stepsOk = post.forall { op =>
         op match {
@@ -294,9 +206,9 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
         }
         // the leased base survives until the live writer itself retires
         // it past keepGenerations — the stale writer never GCs it
-        val leasedOk = liveInstalls > Keep || leased == s"$dir/base" ||
-          (f.exists(new Path(s"$leased/${DeltaLog.CommitMarker}")) &&
-            f.exists(new Path(s"$leased/docs")))
+        val leasedOk = liveInstalls > Keep || leased.forall(l =>
+          f.exists(new Path(s"$l/${DeltaLog.CommitMarker}")) &&
+            f.exists(new Path(s"$l/docs")))
         viewOk() && leasedOk
       }
       stepsOk && viewOk()
@@ -310,7 +222,6 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("dlog-midc").toString
     val root = s"$dir/commits"
     val f = DeltaLog.fs(spark, dir)
-    DeltaLog.initRoot(spark, root)
     def payload(path: String): Unit = {
       f.mkdirs(new Path(s"$path/docs"))
       f.create(new Path(s"$path/docs/d"), true).close()
@@ -327,13 +238,13 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
       }
     }
     // the fenced commit left only an invisible `.tmp-*` stray
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1))
+    assert(DeltaLog.listSeqs(spark, root) == Seq(1))
     assert(!f.exists(new Path(s"$root/2")))
     // and the rival proceeds cleanly over it
     val seq = DeltaLog.nextSeq(spark, root)
     DeltaLog.commit(spark, root, seq, "docs", fenceDomain = dir,
       epoch = w2)(payload): Unit
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1, seq))
+    assert(DeltaLog.listSeqs(spark, root) == Seq(1, seq))
   }
 
   test("a rival arriving mid-install leaves an unsealed generation readers never resolve") {
@@ -406,27 +317,6 @@ class DeltaLogCrashPropertySpec extends SparkSpec {
     assert(restarted.epoch == live.epoch + 1)
     assert(f.delete(damaged, false))
     DeltaLog.checkFence(spark, restarted) // healthy again after repair
-  }
-
-  test("migrateLegacy registers a fresh epoch that fences a zombie writer") {
-    val dir = java.nio.file.Files.createTempDirectory("dlog-mig").toString
-    val root = s"$dir/commits"
-    val f = DeltaLog.fs(spark, dir)
-    (1 to 2).foreach { i => // complete pre-marker legacy commits
-      f.mkdirs(new Path(s"$root/$i/docs"))
-      f.create(new Path(s"$root/$i/docs/c$i"), true).close()
-    }
-    val zombie = DeltaLog.acquireEpoch(spark, dir)
-    assert(DeltaLog.migrateLegacy(spark, root, "docs", upToSeq = 2,
-      fenceDomain = dir) == Seq(1, 2))
-    intercept[FencedWriterException] {
-      DeltaLog.commit(spark, root, DeltaLog.nextSeq(spark, root), "docs",
-          fenceDomain = dir, epoch = zombie) { tmp =>
-        f.mkdirs(new Path(s"$tmp/docs"))
-        f.create(new Path(s"$tmp/docs/z"), true).close()
-      }
-    }
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1, 2))
   }
 
   test("reader lease: a resolved base stays complete across exactly keepGenerations installs") {

@@ -1,6 +1,10 @@
 package graft.sink
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.{JobExecutionStatus, ListenerBusDrain}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -52,36 +56,36 @@ class DeltaLogSpec extends SparkSpec {
     assert(DeltaLog.nextSeq(spark, root) == 8)
   }
 
-  test("versioned base: torn installs invisible, legacy fallback, GC") {
+  test("versioned base: torn installs invisible, GC") {
     val dir = tmpDir("dlog-base")
     val f = DeltaLog.fs(spark, dir)
     def mkData(path: String, tag: String): Unit = {
       f.mkdirs(new Path(path))
       f.create(new Path(s"$path/$tag"), true).close()
     }
-    // legacy bare layout resolves as generation 0
-    mkData(s"$dir/cells", "legacy")
-    assert(DeltaLog.currentBase(spark, dir, "cells") == s"$dir/cells")
     // a TORN install (data, no marker — the mid-copy / crashed-compact
-    // state) must not shadow the live base
+    // state) is never resolved: with no sealed generation there is no base
     mkData(s"$dir/cells-v1", "torn")
-    assert(DeltaLog.currentBase(spark, dir, "cells") == s"$dir/cells")
-    // a sealed install becomes current; its number skipped the torn v1
+    intercept[java.io.FileNotFoundException](
+      DeltaLog.currentBase(spark, dir, "cells"))
+    // a sealed install becomes current; its number skipped the torn v1,
+    // which it GCs (no reader ever resolved it)
     val p2 = DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir)(mkData(_, "gen2"))
     assert(p2 == s"$dir/cells-v2")
     assert(DeltaLog.currentBase(spark, dir, "cells") == s"$dir/cells-v2")
-    // legacy survives as the previous generation until the NEXT install
-    assert(f.exists(new Path(s"$dir/cells")))
+    assert(!f.exists(new Path(s"$dir/cells-v1")))
     val p3 = DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir)(mkData(_, "gen3"))
     assert(p3 == s"$dir/cells-v3")
     assert(DeltaLog.currentBase(spark, dir, "cells") == s"$dir/cells-v3")
-    // now legacy and the torn v1 are gone; sealed v2 is kept for
-    // in-flight readers; v2 goes on the install after that
-    assert(!f.exists(new Path(s"$dir/cells")))
-    assert(!f.exists(new Path(s"$dir/cells-v1")))
+    // sealed v2 is kept for in-flight readers until the install after
     assert(f.exists(new Path(s"$dir/cells-v2")))
-    DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir)(mkData(_, "gen4")): Unit
+    // a torn install above the current generation does not shadow it
+    mkData(s"$dir/cells-v4", "torn")
+    assert(DeltaLog.currentBase(spark, dir, "cells") == s"$dir/cells-v3")
+    val p5 = DeltaLog.installBase(spark, dir, "cells", fenceDomain = dir)(mkData(_, "gen5"))
+    assert(p5 == s"$dir/cells-v5")
     assert(!f.exists(new Path(s"$dir/cells-v2")))
+    assert(!f.exists(new Path(s"$dir/cells-v4")))
     assert(f.exists(new Path(s"$dir/cells-v3")))
   }
 
@@ -178,166 +182,6 @@ class DeltaLogSpec extends SparkSpec {
       "pid", "lat", "lon", dir) == 778)
   }
 
-  test("legacy marker-less commits: read adopts in memory, write persists") {
-    // a store written by the pre-marker protocol: committed dirs exist
-    // but carry no sentinel — a marker-gated read must grandfather them
-    // WITHOUT writing (readers may hold read-only credentials), not
-    // silently drop the store's history
-    val dir = tmpDir("dlog-adopt")
-    StatsStore.init(Seq("a", "b").toDF("v"), Seq("v"), dir)
-    StatsStore.append(Seq("c").toDF("v"), dir)
-    StatsStore.append(Seq("d", "e").toDF("v"), dir)
-    val before = StatsStore.profile(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    val f = DeltaLog.fs(spark, dir)
-    // strip every sentinel: the pre-upgrade on-disk state
-    Seq(1, 2).foreach(s =>
-      f.delete(new Path(s"$dir/commits/$s/${DeltaLog.CommitMarker}"), false))
-    f.delete(new Path(s"$dir/commits/${DeltaLog.AdoptedMarker}"), false)
-    // an INCOMPLETE stray (no 'stats' payload child) must NOT be adopted
-    plantTorn(s"$dir/commits", 9)
-    val after = StatsStore.profile(spark, dir)
-      .collect().map(_.toString).sorted.toSeq
-    assert(after == before)
-    // the READ adopted in memory only: nothing was persisted
-    Seq(1, 2, 9).foreach(s =>
-      assert(!f.exists(new Path(s"$dir/commits/$s/${DeltaLog.CommitMarker}"))))
-    assert(!f.exists(new Path(s"$dir/commits/${DeltaLog.AdoptedMarker}")))
-    // the next WRITE persists the adoption (sweep + root sentinel before
-    // its rename), skipping the incomplete stray; the stray burned seq 9
-    // so the new commit lands at 10
-    StatsStore.append(Seq("f").toDF("v"), dir)
-    Seq(1, 2).foreach(s =>
-      assert(f.exists(new Path(s"$dir/commits/$s/${DeltaLog.CommitMarker}"))))
-    assert(f.exists(new Path(s"$dir/commits/${DeltaLog.AdoptedMarker}")))
-    assert(!f.exists(new Path(s"$dir/commits/9/${DeltaLog.CommitMarker}")))
-    // once adopted, a new marker-less dir is a TORN commit again — even
-    // with a plausible payload child it stays invisible and unsealed
-    val f2 = DeltaLog.fs(spark, dir)
-    f2.mkdirs(new Path(s"$dir/commits/11/stats"))
-    f2.create(new Path(s"$dir/commits/11/stats/data"), true).close()
-    assert(DeltaLog.listSeqs(spark, s"$dir/commits", Some("stats"))
-      == Seq(1, 2, 10))
-    assert(!f2.exists(new Path(s"$dir/commits/11/${DeltaLog.CommitMarker}")))
-  }
-
-  test("mixed sealed+markerless roots never auto-adopt; migrateLegacy does") {
-    // the mid-upgrade store the r12 sweep mishandled: legacy marker-less
-    // history BELOW marker-era sealed commits, no root sentinel. A
-    // marker-less dir here is ambiguous (it could be a marker-era commit
-    // that crashed between rename and seal, its batch retried under a
-    // later seq — adopting it double-counts), so neither reads nor
-    // writes adopt; the operator-asserted migrateLegacy is the only way.
-    val dir = tmpDir("dlog-mixed")
-    val root = s"$dir/commits"
-    val f = DeltaLog.fs(spark, root)
-    def legacyCommit(s: Int): Unit = {
-      f.mkdirs(new Path(s"$root/$s/docs"))
-      f.create(new Path(s"$root/$s/docs/c$s"), true).close()
-    }
-    legacyCommit(1); legacyCommit(2)
-    // a marker-era commit on top (seals the root as a side effect) —
-    // then strip the root sentinel to recreate the r11-era on-disk state
-    DeltaLog.commit(spark, root, DeltaLog.nextSeq(spark, root), "docs",
-        fenceDomain = root) { tmp =>
-        f.mkdirs(new Path(s"$tmp/docs"))
-        f.create(new Path(s"$tmp/docs/c3"), true).close()
-    }
-    f.delete(new Path(s"$root/${DeltaLog.AdoptedMarker}"), false)
-    Seq(1, 2).foreach(s => // the r11 writer never swept — strip those too
-      f.delete(new Path(s"$root/$s/${DeltaLog.CommitMarker}"), false))
-    // plant a crashed marker-era commit (complete payload, no seal)
-    f.mkdirs(new Path(s"$root/4/docs"))
-    f.create(new Path(s"$root/4/docs/crashed"), true).close()
-    // reads return ONLY the sealed commit — neither the legacy history
-    // nor the crashed dir is auto-adopted, and nothing is persisted
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(3))
-    assert(!f.exists(new Path(s"$root/${DeltaLog.AdoptedMarker}")))
-    // a write doesn't adopt them either (still ambiguous)
-    DeltaLog.commit(spark, root, DeltaLog.nextSeq(spark, root), "docs",
-        fenceDomain = root) { tmp =>
-        f.mkdirs(new Path(s"$tmp/docs"))
-        f.create(new Path(s"$tmp/docs/c5"), true).close()
-    }
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(3, 5))
-    assert(!f.exists(new Path(s"$root/1/${DeltaLog.CommitMarker}")))
-    // the explicit migration: the operator asserts seqs <= 2 are legacy;
-    // the crashed 4 sits above the bound and stays invisible forever
-    f.delete(new Path(s"$root/${DeltaLog.AdoptedMarker}"), false)
-    // fenceDomain must match the domain this root's writers check —
-    // the commits here use the default (the root itself)
-    assert(DeltaLog.migrateLegacy(spark, root, "docs", upToSeq = 2,
-      fenceDomain = root) == Seq(1, 2))
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1, 2, 3, 5))
-    assert(!f.exists(new Path(s"$root/4/${DeltaLog.CommitMarker}")))
-    assert(f.exists(new Path(s"$root/${DeltaLog.AdoptedMarker}")))
-  }
-
-  test("crashed adoption sweep resumes: intent sentinel, no orphaned legacy") {
-    // the write path seals legacy dirs then writes AdoptedMarker — a
-    // crash in between used to leave a half-sealed root that the
-    // zero-sealed rule misread as an ambiguous mixed upgrade, silently
-    // orphaning the unsealed remainder. The AdoptingMarker intent
-    // (written before the first seal) proves the mix came from the
-    // sweep itself: reads resume it in memory, the next write resumes
-    // and completes it.
-    val dir = tmpDir("dlog-resume")
-    val root = s"$dir/commits"
-    val f = DeltaLog.fs(spark, root)
-    def legacyCommit(s: Int): Unit = {
-      f.mkdirs(new Path(s"$root/$s/docs"))
-      f.create(new Path(s"$root/$s/docs/c$s"), true).close()
-    }
-    legacyCommit(1); legacyCommit(2); legacyCommit(3)
-    // simulate the crash window: intent written, dir 1 sealed, then death
-    f.create(new Path(s"$root/${DeltaLog.AdoptingMarker}"), true).close()
-    f.create(new Path(s"$root/1/${DeltaLog.CommitMarker}"), true).close()
-    // a READ during the window sees the full history (in-memory resume)
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1, 2, 3))
-    assert(!f.exists(new Path(s"$root/2/${DeltaLog.CommitMarker}")))
-    // the next WRITE completes the sweep: seals 2 and 3, lands the root
-    // sentinel, clears the intent
-    DeltaLog.commit(spark, root, DeltaLog.nextSeq(spark, root), "docs",
-        fenceDomain = root) { tmp =>
-        f.mkdirs(new Path(s"$tmp/docs"))
-        f.create(new Path(s"$tmp/docs/c4"), true).close()
-    }
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1, 2, 3, 4))
-    Seq(1, 2, 3).foreach(s =>
-      assert(f.exists(new Path(s"$root/$s/${DeltaLog.CommitMarker}"))))
-    assert(f.exists(new Path(s"$root/${DeltaLog.AdoptedMarker}")))
-    assert(!f.exists(new Path(s"$root/${DeltaLog.AdoptingMarker}")))
-    // WITHOUT the intent the same half-sealed shape stays ambiguous:
-    // nothing is auto-adopted (the documented migrateLegacy case)
-    val root2 = s"$dir/commits2"
-    val f2 = DeltaLog.fs(spark, root2)
-    f2.mkdirs(new Path(s"$root2/1/docs"))
-    f2.create(new Path(s"$root2/1/docs/c1"), true).close()
-    f2.create(new Path(s"$root2/1/${DeltaLog.CommitMarker}"), true).close()
-    f2.mkdirs(new Path(s"$root2/2/docs"))
-    f2.create(new Path(s"$root2/2/docs/c2"), true).close()
-    assert(DeltaLog.listSeqs(spark, root2, Some("docs")) == Seq(1))
-  }
-
-  test("adoption completeness: truncated parquet and missing _SUCCESS reject") {
-    val dir = tmpDir("dlog-complete")
-    val root = s"$dir/commits"
-    val f = DeltaLog.fs(spark, root)
-    // seq 1: a real (tiny but valid) spark-written parquet payload
-    Seq(1L).toDF("v").coalesce(1).write
-      .parquet(s"$root/1/docs")
-    // seq 2: payload child present but its parquet is TRUNCATED (PAR1
-    // head only — the plantTorn shape) — must not adopt
-    f.mkdirs(new Path(s"$root/2/docs"))
-    val out = f.create(new Path(s"$root/2/docs/part-00000.parquet"), true)
-    out.write(Array[Byte](0x50, 0x41, 0x52, 0x31))
-    out.close()
-    // seq 3: part- files without _SUCCESS (torn spark output copy)
-    f.mkdirs(new Path(s"$root/3/docs"))
-    f.create(new Path(s"$root/3/docs/part-00000"), true).close()
-    assert(DeltaLog.listSeqs(spark, root, Some("docs")) == Seq(1))
-  }
-
   test("base retention: keepGenerations=2 covers a reader spanning two installs") {
     val dir = tmpDir("dlog-keep")
     val f = DeltaLog.fs(spark, dir)
@@ -401,5 +245,59 @@ class DeltaLogSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(after == before)
     assert(StatsStore.append(Seq("w").toDF("v"), dir) == 778)
+  }
+
+  test("interrupting inParallel's caller leaves no leg job running") {
+    val sc = spark.sparkContext
+    val st = sc.statusTracker
+    val legTags = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val tags = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(","))
+          .filter(_.startsWith(DeltaLog.LegTagPrefix))
+        tags.foreach(legTags.add)
+        if (tags.nonEmpty) started.countDown()
+      }
+    }
+    def active(job: Int): Boolean = st.getJobInfo(job).exists { j =>
+      j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0))
+    }
+    // four tasks of two one-second rows each: the write is still running
+    // when the caller is interrupted
+    val slow = udf { (i: Long) => Thread.sleep(1000); i }
+    val out = tmpDir("dlog-interrupt")
+    @volatile var surfaced: Throwable = null
+    @volatile var reinterrupted = false
+    @volatile var stillActive: Seq[Int] = Nil
+    val caller = new Thread(() =>
+      try DeltaLog.inParallel(spark)(
+        () => spark.range(0, 8, 1, 4).select(slow(col("id")).as("id"))
+          .write.mode("overwrite").parquet(s"$out/slow"),
+        () => ())
+      catch {
+        case e: Throwable =>
+          reinterrupted = Thread.interrupted()
+          ListenerBusDrain(sc)
+          stillActive = legTags.asScala.toSeq
+            .flatMap(t => st.getJobIdsForTag(t).toSeq).filter(active)
+          surfaced = e
+      })
+    sc.addSparkListener(listener)
+    try {
+      caller.start()
+      assert(started.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      Thread.sleep(300)
+      caller.interrupt()
+      caller.join(120000)
+    } finally sc.removeSparkListener(listener)
+    assert(!caller.isAlive)
+    assert(surfaced.isInstanceOf[InterruptedException], String.valueOf(surfaced))
+    assert(reinterrupted, "the caller's interrupt status must be restored")
+    assert(legTags.size == 1)
+    assert(stillActive.isEmpty, s"leg jobs still active: $stillActive")
   }
 }

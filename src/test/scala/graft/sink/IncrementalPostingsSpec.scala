@@ -338,4 +338,25 @@ class IncrementalPostingsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("withPositions"))
   }
+
+  test("the file-per-split session memo does not pin a dropped session") {
+    // the memo maps a parent session to its derived read session; once
+    // the parent is dropped, the memo must let it go. No job runs on the
+    // parent: Spark's own lazily started pool threads inherit the
+    // session active when they start, which would pin it independently
+    // of the memo
+    def memoizeThrowawaySession(): java.lang.ref.WeakReference[AnyRef] = {
+      val parent = spark.newSession()
+      val derived = IncrementalPostings.filePerSplitSession(parent)
+      assert(IncrementalPostings.filePerSplitSession(parent) eq derived)
+      assert(derived ne parent)
+      new java.lang.ref.WeakReference(parent)
+    }
+    val ref = memoizeThrowawaySession()
+    var tries = 0
+    while (ref.get != null && tries < 50) {
+      System.gc(); Thread.sleep(100); tries += 1
+    }
+    assert(ref.get == null, s"parent session still reachable after $tries GCs")
+  }
 }

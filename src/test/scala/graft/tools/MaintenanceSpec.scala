@@ -78,7 +78,7 @@ class MaintenanceSpec extends SparkSpec {
       sigDir): Unit
     // dryRun stays read-only: no compaction, the pending commit survives
     assert(runner.maintain(dryRun = true).exists(_.dryRun))
-    assert(DeltaLog.listSeqs(spark, s"$sigDir/commits", Some("docs")).nonEmpty)
+    assert(DeltaLog.listSeqs(spark, s"$sigDir/commits").nonEmpty)
     assert(!f.exists(gen(2)))
 
     runner.maintain() // buckets-v2, keep=2 → v1 survives
